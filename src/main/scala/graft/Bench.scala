@@ -1,6 +1,20 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+
+  /** Where a run's JSON goes. `BENCH_RESULTS.json` (relative to the
+    * working directory, the repo root under sbt) is the artifact of
+    * record, so only a full-suite sf0.1 run writes it; any other run goes
+    * to the path the caller names (SPARK_GRAFT_RESULTS) or, if none is
+    * named, under target/.
+    */
+  def resultsFile(sfDir: String, only: Option[Set[String]], named: Option[String]): String =
+    named.getOrElse {
+      val fullRun = only.isEmpty &&
+        java.nio.file.Paths.get(sfDir).getFileName.toString == "sf0.1"
+      if (fullRun) "BENCH_RESULTS.json" else "target/BENCH_RESULTS.json"
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -198,14 +212,11 @@ object Bench {
     // slowest timings). Durability: (a) persist the complete JSON to a
     // file in the repo, (b) print the full line first, (c) end with a
     // short total+slowest line that survives any tail capture.
-    // relative to the process working directory (the repo root under the
-    // driver's sbt invocation); override via SPARK_GRAFT_RESULTS when
-    // launching from elsewhere
-    val resultsPath = sys.env.getOrElse("SPARK_GRAFT_RESULTS", "BENCH_RESULTS.json")
+    val resultsPath = resultsFile(sfDir, only, sys.env.get("SPARK_GRAFT_RESULTS"))
     try {
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(resultsPath),
-        (full + "\n").getBytes("UTF-8"))
+      val out = java.nio.file.Paths.get(resultsPath).toAbsolutePath
+      java.nio.file.Files.createDirectories(out.getParent)
+      java.nio.file.Files.write(out, (full + "\n").getBytes("UTF-8"))
     } catch { case e: Throwable =>
       System.err.println(s"[bench] results-file write failed: ${e.getMessage}") }
     println(full)

@@ -21,10 +21,15 @@ object Analytics {
     * across environments — parquet TIMESTAMP(NANOS) in rounds ≤7, parquet
     * `timestamp[us]` (isAdjustedToUTC=false) since round 8 — and a reader
     * hard-wired to either shape silently breaks every downstream query
-    * when the other shows up (the round-8 red round). So: inspect the type
-    * Spark actually inferred and normalize to TimestampType with
-    * micros-since-epoch-UTC semantics, which under the UTC session the
-    * whole repo runs in is value-identical to DuckDB's `epoch_us(ts)`.
+    * when the other shows up (the round-8 red round). So the table is read
+    * through [[Tables]], which resolves the file's schema once per
+    * (session, file listing, parquet confs) with Spark's own inference and
+    * supplies it to every later read, and `ts` is normalized from the
+    * RESOLVED type to TimestampType with micros-since-epoch-UTC semantics,
+    * which under the UTC session the whole repo runs in is value-identical
+    * to DuckDB's `epoch_us(ts)`. The branch is decided by the resolved
+    * schema, so it is fixed until the file or the session's parquet confs
+    * change — and then resolved again, never stale:
     *
     *  - LongType — TIMESTAMP(NANOS) read via the session conf
     *    `spark.sql.legacy.parquet.nanosAsLong=true` (a SQLConf the parquet
@@ -42,18 +47,8 @@ object Analytics {
     *    conversion node in the plan at all, and time predicates push to
     *    the parquet scan natively.
     */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = s"$sfDir/events.parquet"
-    val raw = spark.read.parquet(path)
-    raw.schema("ts").dataType match {
-      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case TimestampType => raw
-      case other => throw new IllegalStateException(
-        s"events.ts: unsupported parquet-inferred type $other " +
-          "(expected LongType via nanosAsLong, TimestampNTZType, or TimestampType)")
-    }
-  }
+  def events(spark: SparkSession, sfDir: String): DataFrame =
+    eventsFrom(spark, sfDir, None)
 
   /** Time-bounded events scan with the predicate applied to the RAW column
     * at its storage type — a filter on a converted expression cannot reach
@@ -62,24 +57,32 @@ object Analytics {
     * sink is additionally date-partitioned) this is the difference between
     * scanning an hour and scanning the table.
     */
-  def eventsSince(spark: SparkSession, sfDir: String, sinceIso: String): DataFrame = {
-    val instant = java.time.Instant.parse(sinceIso)
-    val path = s"$sfDir/events.parquet"
-    val raw = spark.read.parquet(path)
-    val filtered = raw.schema("ts").dataType match {
-      case LongType => // nanos-as-long: compare raw nanos, then convert
-        raw.filter(col("ts") >= lit(instant.getEpochSecond * 1000000000L))
-          .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampNTZType => // NTZ literal pushes; cast after the filter
-        raw.filter(col("ts") >=
-            lit(java.time.LocalDateTime.ofInstant(instant, java.time.ZoneOffset.UTC)))
-          .withColumn("ts", col("ts").cast(TimestampType))
-      case TimestampType => // native timestamp literal pushes as-is
-        raw.filter(col("ts") >= lit(instant))
-      case other => throw new IllegalStateException(
-        s"events.ts: unsupported parquet-inferred type $other")
-    }
-    filtered
+  def eventsSince(spark: SparkSession, sfDir: String, sinceIso: String): DataFrame =
+    eventsFrom(spark, sfDir, Some(java.time.Instant.parse(sinceIso)))
+
+  /** The one `ts` match behind [[events]] and [[eventsSince]]: per resolved
+    * storage type, the literal a lower bound takes at that type (so it
+    * pushes to the scan) and the conversion to TimestampType applied
+    * after the filter.
+    */
+  private def eventsFrom(
+      spark: SparkSession, sfDir: String, since: Option[java.time.Instant]): DataFrame = {
+    val raw = Tables.read(spark, s"$sfDir/events.parquet")
+    val (bound, normalize): (java.time.Instant => Any, DataFrame => DataFrame) =
+      raw.schema("ts").dataType match {
+        case LongType => // raw nanos: compare nanos, then convert
+          (i => i.getEpochSecond * 1000000000L,
+            _.withColumn("ts", expr("timestamp_micros(ts div 1000)")))
+        case TimestampNTZType => // NTZ literal pushes; cast after the filter
+          (i => java.time.LocalDateTime.ofInstant(i, java.time.ZoneOffset.UTC),
+            _.withColumn("ts", col("ts").cast(TimestampType)))
+        case TimestampType => // native timestamp literal pushes as-is
+          (i => i, identity)
+        case other => throw new IllegalStateException(
+          s"events.ts: unsupported parquet-inferred type $other " +
+            "(expected LongType via nanosAsLong, TimestampNTZType, or TimestampType)")
+      }
+    normalize(since.fold(raw)(i => raw.filter(col("ts") >= lit(bound(i)))))
   }
 
   /** F4-analog: "last hour" → last day of the dataset. */

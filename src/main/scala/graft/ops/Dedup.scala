@@ -592,13 +592,6 @@ object Dedup {
       .orderBy(col("corpus_id"), col("batch_id"))
   }
 
-  /** 64-bit SimHash over shingles: bit j of the signature is the majority
-    * vote of shingle-hash bit j — one hash pass + one codegen'd majority
-    * loop ([[graft.functions.SimHash64]]). Row-local.
-    */
-  def simHash(shingleArr: Column): Column =
-    simhash64(transform(shingleArr, s => xxhash64(s)))
-
   /** SimHash near-dup pairs with Hamming distance ≤ maxDist, blocked by
     * 8-bit chunks: any pair within distance 7 must agree on ≥1 of 8
     * chunks (pigeonhole), so candidates come from an equi-join on chunk

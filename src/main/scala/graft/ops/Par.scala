@@ -38,46 +38,6 @@ private[graft] object Par {
 
   val MinScanParallelismKey = "spark.graft.minScanParallelism"
 
-  /** BYTE-ADAPTIVE partition sizing, scoped to a fixed-point loop's body
-    * (guide §2.2 "fewer, larger partitions", made scale-adaptive by
-    * letting AQE size every exchange — including the ones feeding the
-    * loop's persisted edge cache — by actual bytes):
-    *
-    *  - `canChangeCachedPlanOutputPartitioning=true` lets AQE coalesce
-    *    the exchange feeding a persist, so the loop cache every round
-    *    re-reads holds size-appropriate partitions instead of pinning
-    *    `spark.sql.shuffle.partitions` tasks onto a kilobyte frame;
-    *  - `coalescePartitions.parallelismFirst=false` makes the coalescing
-    *    respect `advisoryPartitionSizeInBytes` (the setting Spark's own
-    *    docs recommend) for the per-round label/aggregate shuffles too.
-    *
-    * Round-13 profiling: the loop families spent over half their wall
-    * clock scheduling near-empty tasks (q_entity_resolution 4.9 s wall,
-    * ~2 s stage time, 97 jobs of 32 tasks over a 0.1 MB frame); with the
-    * scope, same-window best-of-3 fell 4.9 → 4.1 s (ER), 4.1 → 3.2 s
-    * (connected components), with identical results.
-    *
-    * SCOPED, not session-wide: a session-wide version of the same two
-    * flags was measured and REJECTED (suite 224 → 248 s) because the
-    * byte-based coalescing also squeezed deliberately-WIDENED
-    * compute-dense persisted frames (the setSimJoinPrefix verify,
-    * containment, the supplier window family) onto one task. Inside the
-    * scope the [[widen]]-family frames stay safe regardless: explicit-N
-    * repartitions are never AQE-coalesced. Confs are restored in a
-    * finally (nesting-safe: each scope restores what it saw), and only
-    * the loop's OWN actions run inside — callers plan the returned
-    * readout frame after restoration.
-    *
-    * At production scale the scope is inert by construction: every
-    * coalesce decision is per-exchange bytes vs the advisory size, so a
-    * TB-sized edge frame keeps its width.
-    */
-  def withLoopCoalesce[T](spark: SparkSession)(body: => T): T =
-    withConfs(spark, Seq(
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false"))(
-      body)
-
   /** Scoped session-conf override, restored in a finally (nesting-safe:
     * each scope restores exactly what it saw). Only the scope's OWN
     * actions may run inside — session confs are process-wide, so scopes

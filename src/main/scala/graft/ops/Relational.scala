@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
 object Relational {
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    Tables.read(spark, s"$sfDir/$name.parquet")
 
   private def money(c: String) = col(c).cast("decimal(18,2)")
 

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   def embeddings(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/embeddings.parquet")
+    Tables.read(spark, s"$sfDir/embeddings.parquet")
 
   /** Exact top-k neighbors for each query vector. Query side is broadcast;
     * ranking is a window over qid (k small ⇒ per-partition heap via
@@ -460,9 +460,9 @@ object Similarity {
       k: Int = 10,
       nProbe: Int = 3): DataFrame =
     searchAssigned(
-      spark.read.parquet(s"$path/cells"),
+      Tables.read(spark, s"$path/cells"),
       queries,
-      spark.read.parquet(s"$path/centroids"),
+      Tables.read(spark, s"$path/centroids"),
       k, nProbe)
 
   /** Incremental index maintenance: append a batch of new vectors to a
@@ -480,7 +480,7 @@ object Similarity {
       spark: SparkSession,
       path: String,
       newVectors: DataFrame): Unit =
-    assignToCell(newVectors, spark.read.parquet(s"$path/centroids"))
+    assignToCell(newVectors, Tables.read(spark, s"$path/centroids"))
       .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
 
   /** Staleness report for a [[buildIvfIndex]] table — the retrain signal
@@ -500,9 +500,9 @@ object Similarity {
       path: String,
       dim: Int = 64): DataFrame = {
     import graft.functions.VectorFunctions.vecDot
-    val cells = spark.read.parquet(s"$path/cells")
+    val cells = Tables.read(spark, s"$path/cells")
     val cellType = cells.schema("cell").dataType
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = Tables.read(spark, s"$path/centroids")
       .select(col("cell").cast(cellType).as("cell"), col("centroid"),
         Dedup.vecNorm(col("centroid")).as("cnorm"))
     cells
@@ -877,8 +877,8 @@ object Similarity {
       m: Int = 8,
       pqK: Int = 16,
       dim: Int = 64): Unit =
-    assignToCell(newVectors, spark.read.parquet(s"$path/centroids"))
-      .crossJoin(broadcast(packBooks(spark.read.parquet(s"$path/codebooks"))))
+    assignToCell(newVectors, Tables.read(spark, s"$path/centroids"))
+      .crossJoin(broadcast(packBooks(Tables.read(spark, s"$path/codebooks"))))
       .select(col("vec_id"),
         pqEncodeExpr(col("embedding"), m, pqK, dim / m).as("codes"), col("cell"))
       .write.mode("append").partitionBy("cell").parquet(s"$path/codes")
@@ -900,9 +900,9 @@ object Similarity {
       dim: Int = 64,
       shortlist: Int = 50): DataFrame =
     pqSearch(
-      spark.read.parquet(s"$path/codes"),
-      spark.read.parquet(s"$path/centroids"),
-      packBooks(spark.read.parquet(s"$path/codebooks")),
+      Tables.read(spark, s"$path/codes"),
+      Tables.read(spark, s"$path/centroids"),
+      packBooks(Tables.read(spark, s"$path/codebooks")),
       corpus, queries, k, nProbe, m, pqK, dim / m, shortlist)
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,

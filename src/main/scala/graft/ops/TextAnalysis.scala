@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 object TextAnalysis {
 
   def documents(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    Tables.read(spark, s"$sfDir/documents.parquet")
 
   /** Whitespace tokens, lowercased. */
   def tokens(text: Column): Column = split(lower(text), "\\s+")

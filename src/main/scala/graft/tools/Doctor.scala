@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import graft.ops.Tables
 
 /** Operational readiness check — `runMain graft.tools.Doctor [sfDir]`.
   *
@@ -44,14 +45,13 @@ object Doctor {
       "orders", "lineitem", "events", "documents", "embeddings")
     tables.foreach { t =>
       check(s"table $t") {
-        val n = spark.read.parquet(s"$sfDir/$t.parquet").count()
+        val n = Tables.read(spark, s"$sfDir/$t.parquet").count()
         require(n > 0, "empty table")
         s"$n rows"
       }
     }
     check("events.ts storage type") {
-      val raw = spark.read.parquet(s"$sfDir/events.parquet")
-      raw.schema("ts").dataType match {
+      Tables.schema(spark, s"$sfDir/events.parquet")("ts").dataType match {
         case LongType => "raw nanos as LONG (legacy nanosAsLong path)"
         case TimestampNTZType => "TIMESTAMP_NTZ (micros, cast path)"
         case TimestampType => "TIMESTAMP (native path, filters push down)"

@@ -18,7 +18,7 @@ object Inspect {
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
     tables.foreach { t =>
-      val df = spark.read.parquet(s"$sfDir/$t.parquet")
+      val df = graft.ops.Tables.read(spark, s"$sfDir/$t.parquet")
       println(s"=== $t (${df.count()} rows) ===")
       df.printSchema()
       df.show(3, truncate = 60)
