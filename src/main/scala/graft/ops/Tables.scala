@@ -1,7 +1,7 @@
 package graft.ops
 
 import scala.collection.concurrent.TrieMap
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -54,18 +54,17 @@ object Tables {
   private def fingerprint(spark: SparkSession, path: String): Fingerprint = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = Seq.newBuilder[(String, Long, Long)]
+    // listStatus, not listFiles: the LocatedFileStatus that listFiles builds
+    // copies each file's permissions, which the local file system reads by
+    // starting a process per file (Spark's own listing avoids it too)
+    def walk(s: FileStatus): Seq[(String, Long, Long)] =
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(walk)
+      else Seq((s.getPath.toString, s.getLen, s.getModificationTime))
     // a missing path lists as empty; inference then raises Spark's own error
-    if (fs.exists(p)) {
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val f = it.next()
-        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-    }
+    val files = if (fs.exists(p)) walk(fs.getFileStatus(p)) else Nil
     val confs = spark.conf.getAll.filter { case (k, _) =>
       k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
     }
-    (files.result().sorted, confs)
+    (files.sorted, confs)
   }
 }
