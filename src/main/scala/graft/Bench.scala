@@ -35,8 +35,8 @@ object Bench {
     // fresh session: after the 100+-query suite the unified memory pool
     // is under execution/storage pressure, the persisted wire frame
     // partially spills, and the identical plan measures 4-5x slower —
-    // that is heap state, not engine throughput (standalone probe
-    // graft.tools.Throughput confirms the fresh-session number).
+    // that is heap state, not engine throughput (with SPARK_GRAFT_ONLY
+    // naming no query, Bench runs just this probe and the latency one).
     // 1M default (was 2M): the probe must be robust under the driver's
     // default 8 GiB heap — at 2M the cached wire frame plus parse-chain
     // allocation pressure spilled and GC'd, and the artifact recorded

@@ -655,78 +655,23 @@ object Dedup {
 
   /** Connected components over near-dup pairs — the step a dedup pipeline
     * runs AFTER pair generation: transitively-linked documents form one
-    * cluster (keep one doc per cluster, drop the rest). Min-label
-    * propagation: every doc starts as its own label; each iteration
-    * lowers a doc's label to the minimum among its neighbors; fixpoint =
-    * connected components with cluster_id = min doc_id in the component.
-    *
-    * Scale shape: one equi-join + one aggregate per iteration, all
-    * hash-partitioned on ids — no driver-side graph. Iteration count is
-    * the component DIAMETER (plain min-label propagation is O(diameter),
-    * not O(log n); near-dup clusters are small cliques/chains in
-    * practice, so a handful of rounds converge). Non-convergence within
-    * `maxIters` throws rather than silently returning partial labels —
-    * wrong cluster ids would quietly corrupt downstream keeper logic.
-    * `localCheckpoint` after each step truncates the lineage so plan
-    * size stays constant across iterations. Deterministic (min is
-    * order-insensitive) — oracle: DuckDB recursive CTE closure.
+    * cluster (keep one doc per cluster, drop the rest); cluster_id = min
+    * doc_id in the component, by the [[Components.minLabel]] kernel
+    * (~log₂ D rounds for a chain of diameter D; non-convergence within
+    * `maxIters` throws rather than returning labels that would corrupt
+    * downstream keeper logic). The kernel runs on the INDUCED SUBGRAPH
+    * only — a doc with no near-dup edge can never change label, so the
+    * state is the pair endpoints (≪ corpus at 100 TB) and singletons
+    * rejoin at the end. Oracle: DuckDB recursive CTE closure.
     */
   def nearDupClusters(
       docs: DataFrame,
       pairs: DataFrame,
       maxIters: Int = 50): DataFrame = {
-    // staged + measured: the pair frame computes ONCE into a cache (the
-    // symmetrizing union below otherwise planned it twice — for
-    // semanticDedup's unpersisted cell self-join, the whole verify ran
-    // per branch), its bytes size the loop width, and the propagation
-    // runs under static per-round plans (Par.withStaticLoop — measured
-    // rationale there); readout joins below plan outside the scope
-    val spark = docs.sparkSession
-    val stagePairs = pairs.storageLevel ==
-      org.apache.spark.storage.StorageLevel.NONE
-    val src0 = if (stagePairs) pairs.persist() else pairs
-    src0.count()
-    val w = Par.measuredWidth(src0, 2.0)
-    val labels = Par.withStaticLoop(spark, w) {
-    // checkpointed PRE-PARTITIONED on the per-round join key dst (guide
-    // §2.4) at the measured width, sorted within partitions on it, so
-    // each round's sort-merge join reads the checkpoint with no exchange
-    // and no re-sort
-    val edges = src0.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(src0.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .repartition(w, col("dst"))
-      .sortWithinPartitions(col("dst"))
-      .localCheckpoint()
-    // propagate over the INDUCED SUBGRAPH only: a doc with no near-dup
-    // edge can never change label, so the iteration state is the pair
-    // endpoints (≪ corpus — at 100 TB the corpus is billions of docs,
-    // the duplicate graph millions), and singletons rejoin at the end
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("cluster_id", col("doc_id"))
-      .localCheckpoint()
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIters) {
-      val nmin = edges.join(labels, edges("dst") === labels("doc_id"))
-        .groupBy(col("src")).agg(min(col("cluster_id")).as("nmin"))
-      val updated = labels.as("l")
-        .join(nmin, col("l.doc_id") === nmin("src"), "left")
-        .select(col("doc_id"),
-          least(col("cluster_id"), coalesce(col("nmin"), col("cluster_id")))
-            .as("new_cluster_id"),
-          (coalesce(col("nmin"), col("cluster_id")) < col("cluster_id")).as("chg"))
-        .localCheckpoint()
-      changed = updated.filter(col("chg")).count()
-      labels = updated.select(col("doc_id"), col("new_cluster_id").as("cluster_id"))
-      i += 1
-    }
-    if (changed > 0) throw new IllegalStateException(
-      s"nearDupClusters did not converge in $maxIters iterations " +
-        s"($changed labels still changing) — component diameter exceeds " +
-        "maxIters; raise it or pre-split the pair graph")
-    labels
-    }
-    if (stagePairs) src0.unpersist(blocking = false)
+    val labels = Components.minLabel(
+      pairs.select(col("doc_a").as("u"), col("doc_b").as("v")),
+      maxIters, "nearDupClusters")
+      .select(col("node").as("doc_id"), col("label").as("cluster_id"))
     // singletons: every doc with no near-dup edge is its own cluster
     val singletons = docs.select(col("doc_id"))
       .join(labels.select(col("doc_id")), Seq("doc_id"), "left_anti")

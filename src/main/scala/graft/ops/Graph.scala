@@ -4,9 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Iterative graph analytics over corpus-derived graphs. Near-dup
-  * clustering ([[Dedup.nearDupClusters]]) already covers connected
-  * components; this adds weighted PageRank — the standard importance
+/** Iterative graph analytics over corpus-derived graphs. Connected
+  * components share one kernel ([[Components.minLabel]]) with near-dup
+  * clustering; this adds weighted PageRank — the standard importance
   * measure a curation pipeline uses to weight interlinked sources (and
   * the canonical bounded-iteration distributed workload).
   */
@@ -1282,21 +1282,19 @@ object Graph {
     * partition-placement decision starts from; also the generic form of
     * [[Dedup.nearDupClusters]]'s duplicate-cluster labeling). Component
     * label = minimum node id in the component — a canonical fixpoint
-    * REACHED BY ANY convergent min-propagation, so the Spark side is
-    * free to accelerate with pointer jumping (label := label(label),
-    * the [[Identity.resolveEntities]] discipline, O(log diameter)
-    * rounds) while the oracle replays plain synchronous min-propagation
-    * (diameter-many rounds, unrolled CTEs): trajectories differ, the
-    * unique fixpoint cannot.
+    * REACHED BY ANY convergent min-propagation, so the Spark side runs
+    * the seeded, pointer-jumped [[Components.minLabel]] kernel
+    * (O(log diameter) rounds) while the oracle replays plain synchronous
+    * min-propagation (diameter-many rounds, unrolled CTEs): trajectories
+    * differ, the unique fixpoint cannot.
     *
     * Output: one row per component — (component_id = min node, n_nodes,
     * n_edges within), largest first.
     *
     * Shape at 100 TB: the corpus-scale work is the one shared pair
-    * build; each round is an edge⋈label join + node-sized min
-    * aggregate + the pointer-jump self-join on the NODE-sized label
-    * frame, localCheckpoint-bounded. Convergence is enforced — a
-    * non-converged census throws rather than emitting wrong components.
+    * build; the kernel's rounds move only the node-sized label frame.
+    * Convergence is enforced — a non-converged census throws rather than
+    * emitting wrong components.
     */
   def connectedComponents(
       lineitem: DataFrame, minSupport: Long = 2, maxRounds: Int = 30)
@@ -1308,79 +1306,9 @@ object Graph {
   /** [[connectedComponents]] over a prebuilt (ideally cached) pair frame. */
   def connectedComponentsFromPairs(
       pairsIn: DataFrame, maxRounds: Int = 30): DataFrame = {
-    val pairs = pairsIn.select(col("u"), col("v"))
-    val spark = pairsIn.sparkSession
-    // Measure the pair frame (filling the caller's cache with the work
-    // every round was going to read anyway), then run the WHOLE loop
-    // under static plans at the measured width (Par.withStaticLoop —
-    // rationale there: per-round AQE stage jobs dominated the loop).
-    val staged = pairsIn.storageLevel == StorageLevel.NONE
-    val src = if (staged) pairsIn.persist(StorageLevel.MEMORY_AND_DISK)
-      else pairsIn
-    src.count()
-    val w = Par.measuredWidth(src, 2.0)
-    val labels = Par.withStaticLoop(spark, w) {
-      // persisted PRE-PARTITIONED on the per-round join key (guide §2.4)
-      // with EXPLICIT width (explicit-N partitionings are exact, so every
-      // round's sort-merge join co-partitions with the cache) and sorted
-      // within partitions on that key (the cache also satisfies the
-      // join's sort requirement — the edge frame is never re-sorted or
-      // re-exchanged inside the loop; only the node-sized label frame
-      // moves per round). Released after the loop (labels are eagerly
-      // checkpointed, the census reads `pairs`).
-      val edges = pairs
-        .unionAll(pairs.select(col("v").as("u"), col("u").as("v")))
-        .repartition(w, col("v"))
-        .sortWithinPartitions(col("v"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // SEED at min(node, min neighbor) — one relax round for the price of
-      // one aggregate over the cached edge frame (the entity-resolution
-      // seeding discipline); symmetric edges cover every node on the u
-      // side, and every seed is a node id inside the node's own component
-      // ≤ its id, so the fixpoint is unchanged
-      var lab = edges.groupBy(col("u")).agg(min(col("v")).as("mn"))
-        .select(col("u").as("node"),
-          least(col("u"), col("mn")).as("label"))
-        .localCheckpoint(true)
-      var round = 0
-      var changed = 1L
-      while (changed > 0 && round < maxRounds) {
-        val nbrMin = edges
-          .join(lab, edges("v") === lab("node"))
-          .groupBy(col("u")).agg(min(col("label")).as("nbr_label"))
-        val relaxed = lab.as("l")
-          .join(nbrMin, col("l.node") === nbrMin("u"), "left")
-          .select(col("l.node").as("node"), col("l.label").as("old_label"),
-            least(col("l.label"), coalesce(col("nbr_label"), col("l.label")))
-              .as("mid"))
-        // pointer jumping: every label value is itself a node id (mins of
-        // node ids), so the self-join is total and never drops a row.
-        // (A SECOND jump per round — the entity-resolution trick — was
-        // measured and REJECTED here: without an extra per-round
-        // checkpoint the un-materialized relax subtree recomputes 4x,
-        // and on this edge-heavy graph the round cost grew 4.7→7.0 s at
-        // sf0.1 (and blew dbscan's grid graph to 158 s). The ER win only
-        // exists because ITS edge frame — two star keys per record — is
-        // tiny next to the label frame; when the edge relax dominates
-        // the round, extra jumps buy nothing the recomputation doesn't
-        // take back.)
-        val next = relaxed
-          .join(relaxed.select(col("node").as("lid"), col("mid").as("llabel")),
-            col("mid") === col("lid"))
-          .select(col("node"), col("llabel").as("label"),
-            (col("llabel") =!= col("old_label")).as("chg"))
-          .localCheckpoint(true)
-        changed = next.filter(col("chg")).count()
-        lab = next.select(col("node"), col("label"))
-        round += 1
-      }
-      edges.unpersist(blocking = false)
-      if (changed > 0) throw new IllegalStateException(
-        s"connected components did not converge in $maxRounds rounds")
-      lab
-    }
-    if (staged) src.unpersist(blocking = false)
-    val compEdges = pairs
+    val labels =
+      Components.minLabel(pairsIn, maxRounds, "connected components")
+    val compEdges = pairsIn
       .join(labels.select(col("node").as("u"), col("label").as("cl")),
         Seq("u"))
       .groupBy(col("cl").as("component_id"))

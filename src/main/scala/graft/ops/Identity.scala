@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multi-key entity resolution: collapse user records that share any
@@ -22,25 +22,13 @@ object Identity {
     *     self-join on the key), not m² pairwise edges — the difference
     *     between linear and quadratic in the hottest key. Components of
     *     the star graph equal components of the clique graph.
-    *  2. MIN-LABEL PROPAGATION WITH POINTER JUMPING to a fixed point:
-    *     every record starts SEEDED at the min star head across its
-    *     keys (the state one relax round would reach, free with the
-    *     head groupBy); each round takes the min label over the
-    *     record's (symmetrized) neighborhood and itself, THEN
-    *     compresses paths by following the label two hops
-    *     (label := label(label(label))). The compression is what makes
-    *     this deployable: plain neighbor-min needs component-DIAMETER
-    *     rounds (identity graphs routinely chain hundreds of hops — the
-    *     synthetic keys below already build 40-hop chains), while
-    *     double jumping compounds propagated distance ~4× per round →
-    *     ~log₄(diameter) rounds, each one edge-frame shuffle plus two
-    *     label-frame self-joins (the self-joins are cheap next to the
-    *     edge relax and the per-round convergence-count job). The loop checks an exact changed-count
-    *     per round (a count on a record-sized frame) and stops at zero,
-    *     with localCheckpoint bounding lineage (the [[Graph.pageRank]] /
-    *     Bellman-Ford discipline); maxRounds is a documented safety
-    *     bound, and overrunning it raises rather than silently emitting
-    *     a half-merged identity table.
+    *  2. MIN-LABEL PROPAGATION to a fixed point by the
+    *     [[Components.minLabel]] kernel over the key-head graph (below),
+    *     with TWO pointer jumps per round: identity graphs chain hundreds
+    *     of hops (the synthetic keys below already build 40-hop chains),
+    *     and double jumping closes diameter D in ~log₄ D rounds.
+    *     Overrunning maxRounds raises rather than emitting a half-merged
+    *     identity table.
     *  3. The report collapses to one row per entity: canonical id (the
     *     min member), member count, distinct-key count.
     */
@@ -59,12 +47,11 @@ object Identity {
 
   /** The (record_id, label) frame [[resolveEntities]] summarizes —
     * exposed so survivorship ([[goldenRecords]]) can consume the same
-    * converged labels. Input may be pre-persisted; the loop derives its
+    * converged labels. Input may be pre-persisted; the kernel derives its
     * edge frame from it either way.
     */
   def resolveEntityLabels(
       recordKeys: DataFrame, maxRounds: Int = 20): DataFrame = {
-    val spark = recordKeys.sparkSession
     val keyed = recordKeys.select(col("record_id"), col("key"))
     val starHeads = keyed.groupBy(col("key"))
       .agg(min(col("record_id")).as("head_id"))
@@ -84,93 +71,25 @@ object Identity {
     val recHeads = keyed.join(starHeads, "key")
       .select(col("record_id"), col("head_id"))
       .persist()
-    recHeads.count()
-    val w = Par.measuredWidth(recHeads)
-    // the loop runs under static per-round plans at the measured width
-    // (Par.withStaticLoop — measured rationale there: per-round AQE
-    // stage jobs dominated the loop's wall clock)
-    val headLabels = Par.withStaticLoop(spark, w) {
     // per record: its min head ↔ each of its other heads (star edges of
     // the head co-occurrence graph — m−1 rows per record, never m²)
     val hminW = org.apache.spark.sql.expressions.Window
       .partitionBy(col("record_id"))
     val star = recHeads
-      .select(col("head_id").as("a"),
-        min(col("head_id")).over(hminW).as("b"))
-      .filter(col("a") =!= col("b"))
+      .select(col("head_id").as("u"),
+        min(col("head_id")).over(hminW).as("v"))
+      .filter(col("u") =!= col("v"))
       .distinct()
-    // persisted PRE-PARTITIONED on the per-round join key b (guide
-    // §2.4) at the measured width, sorted within partitions on it, so
-    // each round's sort-merge join reads the cache with no exchange and
-    // no re-sort; only the head-sized label frame moves per round
-    val edges = star
-      .union(star.select(col("b").as("a"), col("a").as("b")))
-      .repartition(w, col("b"))
-      .sortWithinPartitions(col("b"))
-      .persist()
-    // SEED at min(self, min neighbor) — the state one relax round
-    // reaches, for one aggregate over the already-partitioned edge
-    // frame; isolated heads (single-key-group components) keep
-    // themselves via the left join. Every seed is a head id inside the
-    // head's own component and ≤ its id, so the fixed point (component
-    // min) is unchanged.
-    var labels = recHeads.select(col("head_id").as("record_id")).distinct()
-      .join(edges.groupBy(col("a")).agg(min(col("b")).as("mn")),
-        col("record_id") === col("a"), "left")
-      .select(col("record_id"),
-        least(col("record_id"), coalesce(col("mn"), col("record_id")))
-          .as("label"))
-      .localCheckpoint()
-    var round = 0
-    var changed = 1L
-    while (changed > 0 && round < maxRounds) {
-      val neighborMin = edges
-        .join(labels, edges("b") === labels("record_id"))
-        .groupBy(col("a")).agg(min(col("label")).as("nbr_label"))
-      val relaxed = labels
-        .join(neighborMin, labels("record_id") === neighborMin("a"), "left")
-        .select(col("record_id"), col("label").as("old_label"),
-          least(col("label"), coalesce(col("nbr_label"), col("label")))
-            .as("label"))
-      // pointer jumping, TWICE per round: label := label(label(label)).
-      // Every label value is itself a record id (mins of record ids),
-      // so each self-join is total and the lookup never drops a row. A
-      // single jump grows propagated distance d → 2d+1 per round; the
-      // second jump (one more record-frame self-join, cheap next to the
-      // edge-frame relax) compounds it to ~4d+3, so a diameter-D chain
-      // closes in ~log₄ D relax rounds instead of ~log₂ D — and each
-      // relax round carries a shuffle over the EDGE frame plus a
-      // convergence-count job, which is where the wall-clock lives.
-      // The OLD label rides along into the checkpoint so the
-      // convergence check below is a partition-local count on
-      // materialized data, not a second shuffle join.
-      val jumped = relaxed
-        .join(relaxed.select(col("record_id").as("lid"),
-          col("label").as("llabel")), col("label") === col("lid"))
-        .select(col("record_id"), col("old_label"),
-          col("llabel").as("label"))
-      val next = jumped
-        .join(jumped.select(col("record_id").as("lid2"),
-          col("label").as("llabel2")), col("label") === col("lid2"))
-        .select(col("record_id"), col("llabel2").as("label"),
-          (col("llabel2") =!= col("old_label")).as("changed"))
-        .localCheckpoint()
-      changed = next.filter(col("changed")).count()
-      labels = next.select(col("record_id"), col("label"))
-      round += 1
-    }
-    require(changed == 0,
-      s"entity resolution did not converge within $maxRounds rounds")
-    edges.unpersist(blocking = false)
-    labels
-    }
+    // two jumps a round: this edge frame is tiny next to the label frame
+    val headLabels = Components.minLabel(star, maxRounds, "entity resolution",
+      nodes = Some(recHeads.select(col("head_id").as("node"))), jumps = 2)
     // every record inherits the component label of its heads (min over
     // keys is a determinism formality — a record's heads are mutually
     // linked by the record itself, so their labels agree); eagerly
     // checkpointed, preserving the "returns materialized labels"
     // contract callers rely on, and letting the head-map cache go
     val out = recHeads
-      .join(headLabels, recHeads("head_id") === headLabels("record_id"))
+      .join(headLabels, recHeads("head_id") === headLabels("node"))
       .groupBy(recHeads("record_id").as("record_id"))
       .agg(min(col("label")).as("label"))
       .localCheckpoint()

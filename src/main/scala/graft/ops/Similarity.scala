@@ -962,8 +962,9 @@ object Similarity {
             col("a.norm") / col("b.norm"))
         .filter(col("cos") >= threshold)
         .select(col("a.vec_id").as("doc_a"), col("b.vec_id").as("doc_b"))
-      // nearDupClusters eagerly checkpoints the edge set, so the persisted
-      // assignment is consumed before the finally-unpersist
+      // nearDupClusters counts the edge set and checkpoints its labels
+      // eagerly, so the persisted assignment is consumed before the
+      // finally-unpersist
       Dedup.nearDupClusters(
         embeddings.select(col("vec_id").as("doc_id")), pairs)
         .select(col("doc_id").as("vec_id"), col("cluster_id"),

@@ -115,14 +115,13 @@ object Spatial {
     *
     * Shape at 100 TB: candidate pairs come from the same 3×3 ε-grid
     * cell join as [[spatialNeighbors]] — O(Σ cell density²), never
-    * all-pairs. The component loop is [[Dedup.nearDupClusters]]'s
-    * min-label propagation: it iterates on the CORE-EDGE subgraph only
-    * (density clusters have tiny diameter in grid units), each round one
-    * equi-join + one aggregate, localCheckpoint-bounded lineage,
-    * convergence enforced — non-convergence throws rather than emitting
-    * wrong labels. Border attachment and the role readout are two more
-    * broadcast-scale joins. The oracle replays the same semantics via a
-    * recursive-CTE closure (oracle-scale only).
+    * all-pairs. Cluster labels come from the [[Components.minLabel]]
+    * kernel over the CORE-EDGE subgraph only (isolated cores keep their
+    * own id); a cluster that snakes across many grid cells still closes
+    * in O(log diameter) rounds, and non-convergence throws rather than
+    * emitting wrong labels. Border attachment and the role readout are
+    * two more broadcast-scale joins. The oracle replays the same
+    * semantics via a recursive-CTE closure (oracle-scale only).
     */
   def dbscan(
       events: DataFrame,
@@ -130,17 +129,10 @@ object Spatial {
       minPts: Int = 4,
       maxIters: Int = 50): DataFrame = {
     require(minPts >= 1, "minPts must be at least 1")
-    // staged + measured: the ε-grid candidate join computes ONCE into a
-    // cache (the symmetrizing union below otherwise planned it twice),
-    // its bytes size the label loop's width, and the whole label phase
-    // runs under static per-round plans (Par.withStaticLoop — measured
-    // rationale there: per-round AQE stage jobs dominated the loop)
+    // cached: the symmetrizing union below would plan the grid join twice
     val pairs = neighborPairs(events, epsE6).persist()
-    pairs.count()
-    val w = Par.measuredWidth(pairs, 2.0)
     val pts = events.filter(col("user_id").isNotNull)
       .select(col("user_id").as("uid")).distinct()
-    val (nbrs, labels) = Par.withStaticLoop(events.sparkSession, w) {
     // symmetric neighbor lists (pairs are uid_a < uid_b)
     val nbrs = pairs.select(col("uid_a").as("u"), col("uid_b").as("v"))
       .unionByName(pairs.select(col("uid_b").as("u"), col("uid_a").as("v")))
@@ -149,58 +141,15 @@ object Spatial {
     val degrees = nbrs.groupBy(col("u")).agg(count(lit(1)).as("deg"))
     val core = pts.join(degrees, pts("uid") === degrees("u"), "left")
       .filter(coalesce(col("deg"), lit(0L)) + 1L >= minPts)
-      .select(col("uid"))
+      .select(col("uid").as("node"))
       .localCheckpoint()
-    // min-label propagation over core-core edges only; checkpointed
-    // PRE-PARTITIONED on the per-round join key v (guide §2.4) so each
-    // round shuffles only the core-sized label frame, not the edges
-    val coreEdges = nbrs
-      .join(core.select(col("uid").as("u")), "u")
-      .join(core.select(col("uid").as("v")), "v")
-      .repartition(w, col("v"))
-      .sortWithinPartitions(col("v"))
-      .localCheckpoint()
-    // SEED at min(uid, min core-neighbor) — the state one relax round
-    // reaches, for one aggregate over the already-partitioned core-edge
-    // frame (the entity-resolution seeding discipline). Every seed is a
-    // core uid inside the node's own component and ≤ its uid, so the
-    // fixpoint (component-min core uid) is unchanged; isolated cores
-    // keep themselves via the left join.
-    val seedMin = coreEdges.groupBy(col("u")).agg(min(col("v")).as("mn"))
-    var labels = core
-      .join(seedMin, core("uid") === seedMin("u"), "left")
-      .select(col("uid"),
-        least(col("uid"), coalesce(col("mn"), col("uid"))).as("cluster_id"))
-      .localCheckpoint()
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIters) {
-      val nmin = coreEdges.join(labels, coreEdges("v") === labels("uid"))
-        .groupBy(col("u")).agg(min(col("cluster_id")).as("nmin"))
-      val relaxed = labels.as("l")
-        .join(nmin, col("l.uid") === nmin("u"), "left")
-        .select(col("l.uid").as("uid"), col("l.cluster_id").as("old_label"),
-          least(col("cluster_id"), coalesce(col("nmin"), col("cluster_id")))
-            .as("mid"))
-      // pointer jumping (the [[Identity.resolveEntities]] discipline):
-      // label := label(label) compresses chains, so a cluster that
-      // snakes across many grid cells converges in O(log diameter)
-      // rounds instead of diameter rounds. Every label value is itself
-      // a core uid (mins of core uids), so the self-join is total.
-      val updated = relaxed
-        .join(relaxed.select(col("uid").as("lid"), col("mid").as("llabel")),
-          col("mid") === col("lid"))
-        .select(col("uid"), col("llabel").as("cluster_id"),
-          (col("llabel") =!= col("old_label")).as("chg"))
-        .localCheckpoint()
-      changed = updated.filter(col("chg")).count()
-      labels = updated.select(col("uid"), col("cluster_id"))
-      i += 1
-    }
-    if (changed > 0) throw new IllegalStateException(
-      s"dbscan label propagation did not converge in $maxIters iterations")
-    (nbrs, labels)
-    }
+    // clusters = components over core-core edges (one direction each)
+    val coreEdges = nbrs.filter(col("u") < col("v"))
+      .join(core.select(col("node").as("u")), "u")
+      .join(core.select(col("node").as("v")), "v")
+    val labels = Components.minLabel(coreEdges, maxIters,
+      "dbscan label propagation", nodes = Some(core))
+      .select(col("node").as("uid"), col("label").as("cluster_id"))
     // border: non-core with a core neighbor — attach to the min-labeled
     // core neighbor (ties on label cannot disagree: min is global)
     val borderLabel = nbrs

@@ -128,7 +128,7 @@ object DumpPlans {
       "q_corr_matrix" -> "correlation matrix: k(k+1)/2 cross-sums in ONE aggregate (14 numbers of state), pair rows unpivoted from a single row — one scan at k=4 and still one at k=100",
       "q_mutual_info" -> "MI ranking: one user collapse shared by all features; marginals are windows over ≤20-row joint histograms; micro-nat terms sum order-free",
       "q_isotonic" -> "isotonic fit: corpus → 50 bins in one aggregate; the minimax (PAVA) refinement is a B³ join on the bin DIMENSION — no sequential pool loop anywhere",
-      "q_entity_resolution" -> "entity resolution: star edges per key (never in-key cliques), min-label propagation WITH pointer jumping — O(log diameter) rounds, each one edge shuffle + one label self-join",
+      "q_entity_resolution" -> "entity resolution: star edges per key (never in-key cliques), min-label propagation WITH two pointer jumps a round (Components.minLabel) — O(log diameter) rounds, each one edge shuffle + two label self-joins",
       "q_hubness" -> "hubness: k-occurrence histogram over the exact kNN graph; anti-hubs restored by a left join; at scale the candidate graph comes from IVF, the histogram stays ≤k·n rows",
       "q_lof" -> "LOF: e9-quantized distances, k-bounded kNN frame, two id-keyed re-joins for neighbor sums — integer reach arithmetic, one double excursion at the end",
       "q_kcore" -> "k-core: each peel round is two semi-joins of the edge frame against the node-sized survivor set + one degree aggregate; exact fixed point, localCheckpoint-flat lineage",

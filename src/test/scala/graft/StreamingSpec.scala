@@ -619,7 +619,8 @@ class StreamingSpec extends SparkTestBase {
     val input = MemoryStream[(Long, String, Double, Long)]
     val events = input.toDF().toDF("id", "name", "value", "ts_us")
       .withColumn("timestamp", timestamp_micros($"ts_us")).drop("ts_us")
-    val q = Pipeline.startUpsertSink(events, "id", table, ckpt, nBuckets = 4)
+    val q = Pipeline.startUpsertSink(events, "id", table, ckpt, nBuckets = 4,
+      trigger = Trigger.ProcessingTime(100))
     try {
       input.addData((1L, "a", 10.0, 100L), (2L, "b", 20.0, 200L))
       q.processAllAvailable()
