@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,20 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet ts has drifted across environments — see
-      // Analytics.events: nanosAsLong covers the TIMESTAMP(NANOS) shape,
-      // inferTimestampNTZ=false reads timestamp[us] directly as TIMESTAMP
-      // (UTC session) so time predicates push to the scan natively
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     // A thrown query must be LOUD: round 7/8 lost 34 queries invisibly
     // because failures went only to stderr and the correctness file just
@@ -34,6 +20,11 @@ object Verify {
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
     selected.foreach { case (name, fn) =>
+      // each query starts from an empty cache, as in Bench: a frame an
+      // earlier query persisted must not serve (or re-cache under) a
+      // later one
+      spark.catalog.clearCache()
+      SparkEntry.clearCaches()
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -10,16 +10,19 @@ import graft.schema.EventSchema
   *
   * Steps (SURVEY.md §2.3–2.4):
   *   P1 bytes→string decode        — source-level (text source is string)
-  *   P2 JSON parse                 — from_json, PERMISSIVE (null on corrupt)
-  *   F1 corrupt-record filter      — parsed struct IS NOT NULL
-  *   P3/F2 required-field gate     — id/timestamp/message/user_id/event_type
+  *   P2 JSON parse                 — from_json, PERMISSIVE (corrupt-record column)
   *   P4 processing-time stamp      — current_timestamp()
   *   P5 type coercion + defaulting — value → double, default 0.0
   *   P6 optional-field projection  — schema-declared nullables
   *   P7 message_length             — length(message)
   *   P8 event_hour                 — hour(to_timestamp(...)), error→0
   *   P9 data_quality_score         — four +25 conditions
-  *   F3 quality threshold          — score >= 50
+  *   F1–F4 gates, one ordered list — corrupt_json, missing_required_field,
+  *                                   low_quality, unparseable_timestamp
+  *
+  * [[classify]] runs the chain once and names each row's first failing
+  * gate; the main sink ([[fromRawJson]]) keeps the rows with none and the
+  * dead-letter ([[deadLetter]]) the rest, so each row lands in one.
   *
   * The whole chain is one narrow (shuffle-free) map stage: at 100 TB it
   * scales linearly with input splits — no driver-side work, no state.
@@ -35,34 +38,47 @@ object EventPipeline {
     EventSchema.wireSchema.add(corruptCol, org.apache.spark.sql.types.StringType)
   private val parseOpts = Map("columnNameOfCorruptRecord" -> corruptCol)
 
-  /** P2+F1: parse a column of raw JSON strings against the declared wire
-    * schema; corrupt JSON is dropped — the Spark twin of
-    * Streamingdag.py:233-234. Unknown keys are dropped by construction
-    * (ignoreUnknownValues, Streamingdag.py:319).
-    *
-    * The parse sits behind an [[graft.functions.OptimizerBarrier]] so the
-    * downstream validate/quality filters can't be substituted through the
-    * projection — without it the pushed Filter carried ~12 copies of
-    * `from_json` (round-1 review). One parse per row, on every execution
-    * path, is the plan we want.
+  /** P2: the one JSON parse — `value` → struct `e`, the line kept as
+    * `raw`. Unknown keys are dropped by construction (ignoreUnknownValues,
+    * Streamingdag.py:319). The parse sits behind an
+    * [[graft.functions.OptimizerBarrier]] so the gates can't be
+    * substituted through the projection — without it the pushed Filter
+    * carried ~12 copies of `from_json`.
     */
-  def parse(raw: DataFrame, jsonCol: String = "value"): DataFrame =
-    raw
-      .select(graft.functions.BarrierFunctions.barrier(
-        from_json(col(jsonCol), parseSchema, parseOpts)).as("e"))
-      .filter(col(s"e.$corruptCol").isNull)
-      .select("e.*")
-      .drop(corruptCol)
+  private def parsed(raw: DataFrame): DataFrame =
+    raw.select(col("value").as("raw"),
+      graft.functions.BarrierFunctions.barrier(
+        from_json(col("value"), parseSchema, parseOpts)).as("e"))
 
-  /** P3/F2: required-field presence gate (Streamingdag.py:175-181).
-    * The reference checks dict-key *presence*; a JSON null id would pass
-    * Beam's check and then be stringified to "None". We treat null as
-    * missing (the saner semantics — divergence documented in SURVEY §7.5).
+  /** The four gates as (reject reason, reject predicate), in the order a
+    * row is tested; the only place they are written. `corrupt_json` reads
+    * the parsed struct `e`, the rest read top-level wire and enrichment
+    * columns. No predicate is ever null, so "first gate that holds" (a
+    * CASE) and "no gate holds" (a conjunction) split rows the same way.
     */
-  val requiredFieldsPresent: Column =
-    EventSchema.requiredFields.map(col(_).isNotNull).reduce(_ && _)
+  private val gates: Seq[(String, Column)] = Seq(
+    // F1 (Streamingdag.py:233-234): a null line parses to a null struct,
+    // malformed JSON to one whose corrupt-record column is set
+    "corrupt_json" -> (col("e").isNull || col(s"e.$corruptCol").isNotNull),
+    // F2 (Streamingdag.py:175-181): the reference checks key presence, so
+    // a JSON null id would pass as "None"; null counts as missing here
+    // (divergence documented in SURVEY §7.5)
+    "missing_required_field" ->
+      EventSchema.requiredFields.map(col(_).isNull).reduce(_ || _),
+    // F3 (Streamingdag.py:227-231)
+    "low_quality" -> (col("data_quality_score") < 50),
+    // F4: the typed sink needs a real TIMESTAMP (BigQuery's streaming
+    // insert rejects such rows in the reference, SURVEY §7.5); the
+    // enrichment still gives them event_hour=0
+    "unparseable_timestamp" -> try_to_timestamp(col("timestamp")).isNull)
+  private val rejects: Map[String, Column] = gates.toMap
 
-  def validate(df: DataFrame): DataFrame = df.filter(requiredFieldsPresent)
+  /** P2+F1: the parsed wire fields of every row that is not corrupt JSON. */
+  def parse(raw: DataFrame): DataFrame =
+    parsed(raw).filter(!rejects("corrupt_json")).select("e.*").drop(corruptCol)
+
+  /** F2 over parsed wire fields. */
+  def validate(df: DataFrame): DataFrame = df.filter(!rejects("missing_required_field"))
 
   /** P8: event_hour with the reference's error→0 fallback
     * (Streamingdag.py:207-212). try_to_timestamp parses ISO-8601 with 'Z'
@@ -109,56 +125,41 @@ object EventPipeline {
           col("timestamp")))
   }
 
-  /** F3: quality-threshold gate (Streamingdag.py:227-231). */
-  def qualityFilter(df: DataFrame, threshold: Int = 50): DataFrame =
-    df.filter(col("data_quality_score") >= threshold)
+  /** F3 over enriched rows. */
+  def qualityFilter(df: DataFrame): DataFrame = df.filter(!rejects("low_quality"))
 
-  /** Full chain: raw JSON strings → validated, enriched, quality-filtered
-    * sink rows (the Spark twin of the whole Beam pipeline body,
+  /** One pass of the whole chain over raw JSON lines (column `value`):
+    * `raw` (the line), the sink columns with a typed `timestamp`, and
+    * `reject_reason` — the first gate the row fails, null when it passes
+    * all four. Both sinks are filters over this frame.
+    */
+  def classify(raw: DataFrame, deterministic: Boolean = false): DataFrame = {
+    val (firstReason, firstHolds) = gates.head
+    val rejectReason = gates.tail.foldLeft(when(firstHolds, firstReason)) {
+      case (chain, (reason, holds)) => chain.when(holds, reason)
+    }
+    enrich(parsed(raw).select(col("raw"), col("e"), col("e.*")), deterministic)
+      .withColumn("reject_reason", rejectReason)
+      .withColumn("timestamp", try_to_timestamp(col("timestamp")))
+      .select(col("raw") +: EventSchema.sinkColumns.map(col) :+ col("reject_reason"): _*)
+  }
+
+  /** Full chain: raw JSON lines → the sink rows that pass every gate
+    * (the Spark twin of the whole Beam pipeline body,
     * Streamingdag.py:285-308). Works identically on batch and streaming
     * DataFrames — the same logical plan is incrementalized by Structured
     * Streaming.
     */
-  def fromRawJson(
-      raw: DataFrame,
-      jsonCol: String = "value",
-      deterministic: Boolean = false): DataFrame = {
-    val enriched = enrich(validate(parse(raw, jsonCol)), deterministic)
-    // Rows whose timestamp string can't parse keep event_hour=0 in the
-    // enriched (string-typed) form; the typed sink requires a real
-    // TIMESTAMP, so they drop here — the same rows BigQuery's streaming
-    // insert would reject in the reference (sloppy-semantics note,
-    // SURVEY §7.5).
-    val typed = enriched
-      .withColumn("timestamp", try_to_timestamp(col("timestamp")))
-      .filter(col("timestamp").isNotNull)
-    qualityFilter(typed).select(
-      EventSchema.sinkColumns.map(col): _*)
-  }
+  def fromRawJson(raw: DataFrame, deterministic: Boolean = false): DataFrame =
+    classify(raw, deterministic).filter(col("reject_reason").isNull)
+      .select(EventSchema.sinkColumns.map(col): _*)
 
-  /** K4: dead-letter split — everything `fromRawJson` drops, tagged with
-    * the reason, for a quarantine sink (Streamingdag.py:179-181, :230-231,
-    * :233-236 log-and-drop paths, made durable).
+  /** K4: dead-letter split — every row `fromRawJson` drops, as the raw
+    * line and its `reject_reason`, for a quarantine sink
+    * (Streamingdag.py:179-181, :230-231, :233-236 log-and-drop paths,
+    * made durable).
     */
-  def deadLetter(raw: DataFrame, jsonCol: String = "value"): DataFrame = {
-    val parsed = raw.withColumn("e",
-      graft.functions.BarrierFunctions.barrier(
-        from_json(col(jsonCol), parseSchema, parseOpts)))
-    val missingReq = EventSchema.requiredFields
-      .map(f => col(s"e.$f").isNull).reduce(_ || _)
-    val score = qualityScore(col("e.user_id"), col("e.message"),
-      coalesce(col("e.value").cast("double"), lit(0.0)), col("e.timestamp"))
-    parsed
-      .withColumn(
-        "reject_reason",
-        when(col("e").isNull || col(s"e.$corruptCol").isNotNull, "corrupt_json")
-          .when(missingReq, "missing_required_field")
-          .when(score < 50, "low_quality")
-          // the typed-sink gate in fromRawJson (timestamp must parse to a
-          // real TIMESTAMP) — without this arm such rows vanish from both
-          // the main and quarantine sinks
-          .when(try_to_timestamp(col("e.timestamp")).isNull, "unparseable_timestamp"))
-      .filter(col("reject_reason").isNotNull)
-      .select(col(jsonCol).as("raw"), col("reject_reason"))
-  }
+  def deadLetter(raw: DataFrame): DataFrame =
+    classify(raw).filter(col("reject_reason").isNotNull)
+      .select(col("raw"), col("reject_reason"))
 }

@@ -61,8 +61,7 @@ object Pipeline {
       .select(col("value").cast("string").as("value"))
 
   /** The full per-record chain. Works on streaming and batch frames. */
-  def process(raw: DataFrame, jsonCol: String = "value"): DataFrame =
-    EventPipeline.fromRawJson(raw, jsonCol)
+  def process(raw: DataFrame): DataFrame = EventPipeline.fromRawJson(raw)
 
   /** Stream-stream interval join: each purchase joined to the same
     * user's page views in the `gap` before it. Both sides carry
@@ -120,15 +119,18 @@ object Pipeline {
       .start()
 
   /** K4: dead-letter quarantine sink — the reference's log-and-drop paths
-    * (Streamingdag.py:179-181, :230-231, :233-236) made durable.
+    * (Streamingdag.py:179-181, :230-231, :233-236) made durable: the raw
+    * line and its `reject_reason` for every row [[process]] drops, so the
+    * two sinks together hold each input row once. It is its own query
+    * over `raw`, so running it beside [[startSink]] reads and parses each
+    * row twice; both read the same gates ([[EventPipeline.classify]]).
     */
   def startDeadLetterSink(
       raw: DataFrame,
       path: String,
       checkpoint: String,
-      jsonCol: String = "value",
       trigger: Trigger = DefaultTrigger): StreamingQuery =
-    EventPipeline.deadLetter(raw, jsonCol)
+    EventPipeline.deadLetter(raw)
       .writeStream
       .format("parquet")
       .option("path", path)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev aid: print the executed plan of one SparkEntry query by name —
   * `runMain graft.tools.AdhocPlan <q_name> [sfDir]`. Keeps plan-pin
   * debugging out of throwaway console sessions.
@@ -10,15 +8,7 @@ object AdhocPlan {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     println(df.queryExecution.executedPlan.toString)
     spark.stop()

@@ -3,7 +3,6 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (guide §1): per-stage breakdown of named queries.
   *
@@ -24,21 +23,12 @@ object Profile {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val planDir = if (args.length > 2) Some(args(2)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // dev aid: A/B a conf hypothesis without recompiling —
-    // SPARK_GRAFT_EXTRA_CONF="k1=v1;k2=v2"
+    val spark = graft.Session.local()
+    // dev aid: A/B a runtime conf hypothesis without recompiling —
+    // SPARK_GRAFT_EXTRA_CONF="k1=v1;k2=v2" (a static conf throws here)
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").filter(_.nonEmpty)
       .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+        val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
 
     val stages = ArrayBuffer.empty[StageRow]
     var jobs = 0

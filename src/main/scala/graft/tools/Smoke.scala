@@ -1,17 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: smoke-run SparkEntry.entry the way the driver does (rows>0). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val df = graft.SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

@@ -85,16 +85,43 @@ class EventPipelineSpec extends SparkTestBase {
     val noField = """{"id":"x","timestamp":"2024-01-15T10:00:00Z"}"""
     val badTs =
       """{"id":"x","timestamp":"not-a-date","message":"m","user_id":"u","event_type":"t","value":1.0}"""
-    val dl = EventPipeline.deadLetter(
-      Seq("{corrupt", noField, lowQ, badTs, dagMsg1).toDF("value"))
-    val reasons = dl.select("reject_reason").as[String].collect().sorted
-    assert(reasons.toSeq == Seq("corrupt_json", "low_quality",
-      "missing_required_field", "unparseable_timestamp"))
+    def msg(fields: String) =
+      s"""{"id":"x","message":"m","user_id":"u","event_type":"t",$fields}"""
+    // each input with the first gate it fails, in the declared order
+    // corrupt_json → missing_required_field → low_quality → unparseable_timestamp
+    // (None: accepted)
+    val cases: Seq[(String, Option[String])] = Seq(
+      "{corrupt" -> Some("corrupt_json"),
+      noField -> Some("missing_required_field"),
+      lowQ -> Some("low_quality"),
+      badTs -> Some("unparseable_timestamp"),
+      dagMsg1 -> None,
+      (null: String) -> Some("corrupt_json"),
+      "" -> Some("corrupt_json"),
+      s"[$dagMsg1]" -> Some("corrupt_json"),
+      msg(""""timestamp":"2024-01-15T10:00:00Z","value":"ten"""") -> Some("corrupt_json"),
+      """{"id":"x","timestamp":"2024-01-15T10:00:00Z","message":"m","user_id":null,"event_type":"t","value":1.0}"""
+        -> Some("missing_required_field"),
+      msg(""""timestamp":"","value":1.0""") -> Some("unparseable_timestamp"),
+      msg(""""timestamp":1705312800,"value":1.0""") -> Some("unparseable_timestamp"),
+      // fails two gates: no message (F2) and a score of 25 (F3)
+      """{"id":"x","timestamp":"2024-01-15T10:00:00Z","user_id":"unknown","event_type":"t","value":0.0}"""
+        -> Some("missing_required_field"),
+      // fails two gates: a score of 25 (F3) and a junk timestamp (F4)
+      """{"id":"x","timestamp":"junk","message":"","user_id":"unknown","event_type":"t","value":0.0}"""
+        -> Some("low_quality"))
+    val input = cases.map(_._1).toDF("value")
+    val dl = EventPipeline.deadLetter(input)
+    val byReason = dl.groupBy("reject_reason").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(byReason ==
+      cases.flatMap(_._2).groupBy(identity).map { case (r, rs) => r -> rs.size.toLong })
+    assert(dl.collect().map(r => (r.getString(0), r.getString(1))).toSet ==
+      cases.collect { case (line, Some(reason)) => (line, reason) }.toSet)
     // main-path + dead-letter outputs partition the input: nothing vanishes
-    val kept = EventPipeline.fromRawJson(
-      Seq("{corrupt", noField, lowQ, badTs, dagMsg1).toDF("value"),
-      deterministic = true).count()
-    assert(kept + dl.count() == 5)
+    val kept = EventPipeline.fromRawJson(input, deterministic = true).count()
+    assert(kept == cases.count(_._2.isEmpty))
+    assert(kept + byReason.values.sum == cases.size)
   }
 
   test("sink schema column order matches the declared 19-column table") {

@@ -107,9 +107,11 @@ class PlanShapeSpec extends SparkTestBase {
       col("props").as("message"),
       col("user_id").cast("string").as("user_id"),
       col("event_type"), col("value"))).as("value"))
-    val p = plan(graft.ops.EventPipeline.fromRawJson(wire))
-    val nParses = "from_json".r.findAllIn(p).length
-    assert(nParses == 1, s"expected 1 from_json, found $nParses in:\n$p")
+    for (p <- Seq(plan(graft.ops.EventPipeline.fromRawJson(wire)),
+        plan(graft.ops.EventPipeline.deadLetter(wire)))) {
+      val nParses = "from_json".r.findAllIn(p).length
+      assert(nParses == 1, s"expected 1 from_json, found $nParses in:\n$p")
+    }
   }
 
   test("IVF cell assignment is narrow: no Exchange, no Window") {

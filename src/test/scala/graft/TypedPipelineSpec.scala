@@ -63,7 +63,7 @@ class TypedPipelineSpec extends SparkTestBase {
     val lines = corpus(seed = 7, n = 500)
     val ds = spark.createDataset(lines)
     val typed = TypedPipeline.parseEvents(ds, deterministic = true).toDF()
-    val column = EventPipeline.fromRawJson(ds.toDF(), "value", deterministic = true)
+    val column = EventPipeline.fromRawJson(ds.toDF(), deterministic = true)
     assert(typed.columns.toSeq == column.columns.toSeq)
     val a = typed.collect().map(_.toString).sorted.toSeq
     val b = column.collect().map(_.toString).sorted.toSeq
@@ -83,6 +83,6 @@ class TypedPipelineSpec extends SparkTestBase {
     // "junk" ts keeps score 100 but fails the typed-sink gate; the rest
     // die earlier — both paths must agree the keep-count is zero
     assert(TypedPipeline.parseEvents(ds, deterministic = true).count() == 0)
-    assert(EventPipeline.fromRawJson(ds.toDF(), "value", deterministic = true).count() == 0)
+    assert(EventPipeline.fromRawJson(ds.toDF(), deterministic = true).count() == 0)
   }
 }
