@@ -10,21 +10,24 @@ object Session {
   /** Cores for an entry point's session: `SPARK_GRAFT_CPUS`, default 4. */
   def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
 
-  /** `local[cpus]` with one shuffle partition per core, a UTC session
-    * clock, and both events-ts drift confs set at build (see
-    * Analytics.events: nanosAsLong reads the TIMESTAMP(NANOS) shape as
-    * raw longs, inferTimestampNTZ=false reads timestamp[us] as TIMESTAMP
-    * so time predicates push to the scan). UI off, log level WARN.
+  /** Every conf [[local]] sets at build (tools/Doctor checks each): one
+    * shuffle partition per core, a UTC session clock, both events-ts
+    * drift confs (see Analytics.events: nanosAsLong reads the
+    * TIMESTAMP(NANOS) shape as raw longs, inferTimestampNTZ=false reads
+    * timestamp[us] as TIMESTAMP so time predicates push to the scan),
+    * UI off.
     */
+  def confs(cpus: Int): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+    "spark.ui.enabled" -> "false")
+
+  /** `local[cpus]` with [[confs]], log level WARN. */
   def local(cpus: Int = envCpus): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config(confs(cpus).toMap).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -2526,9 +2526,8 @@ object Analytics {
     * understates them; Spearman is Pearson on MID-RANKS, and with ties
     * the mid-ranks must be averaged, not arbitrary.
     *
-    * Exactness: ×2 mid-ranks are exact integers (the [[mannWhitney]]
-    * discipline — rank2 = 2·(count below) + (count equal) + 1 from one
-    * value-domain cumulative window per axis), so all Pearson
+    * Exactness: ×2 mid-ranks ([[Scan.midRank2]], one value-domain
+    * window per axis) are exact integers, so all Pearson
     * sufficient sums are exact; the final ρ is one correctly-rounded
     * sqrt/divide (the [[volumeAcf]] float discipline).
     *
@@ -2538,19 +2537,15 @@ object Analytics {
     * reaches 2n and its square times n overflows a Long near 2M users.
     */
   def spearman(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val per = df.filter(col("user_id").isNotNull)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("a"),
         coalesce(sum((col("value").cast("decimal(12,2)") * 100)
           .cast("long")), lit(0L)).as("b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def ranks(c: String): DataFrame = {
-      val w = Window.orderBy(col(c)).rowsBetween(Window.unboundedPreceding, -1)
-      per.groupBy(col(c)).agg(count(lit(1)).as("cnt"))
-        .withColumn("below", coalesce(sum(col("cnt")).over(w), lit(0L)))
-        .select(col(c), (lit(2L) * col("below") + col("cnt") + 1L).as(s"r_$c"))
-    }
+    def ranks(c: String): DataFrame =
+      Scan.midRank2(per.groupBy(col(c)).agg(count(lit(1)).as("cnt")),
+        c, "cnt", s"r_$c").select(col(c), col(s"r_$c"))
     per
       .join(ranks("a"), "a")
       .join(ranks("b"), "b")
@@ -2868,30 +2863,16 @@ object Analytics {
     * Reported per type: late shares at 0/1 s/1 min/10 min thresholds
     * (integer e4), max and exact integer-division mean lateness.
     *
-    * The running max is HIERARCHICAL, the same discipline as the corpus
-    * prefix sums: block-local running maxima (event_id div blockWidth)
-    * plus a broadcast carry of per-block maxima — the raw stream never
-    * rides a single-partition global window. max is associative, so the
-    * decomposition is exact, not approximate.
+    * The running max is [[Scan.exclusive]] with no key (`blockWidth` is
+    * its block width): the raw stream never rides a single-partition
+    * global window, and max is associative, so the result is exact.
     */
   def disorderProfile(df: DataFrame, blockWidth: Long = 65536L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = df.select(col("event_id"), col("event_type"),
-      unix_micros(col("ts")).as("ts_us"),
-      expr(s"event_id div $blockWidth").as("block"))
-    val wLocal = Window.partitionBy(col("block")).orderBy(col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wBlocks = Window.orderBy(col("block"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = e.groupBy(col("block"))
-      .agg(max(col("ts_us")).as("block_max"))
-      .withColumn("carry_max", max(col("block_max")).over(wBlocks))
-      .select(col("block").as("c_block"), col("carry_max"))
-    e.withColumn("local_max", max(col("ts_us")).over(wLocal))
-      .join(broadcast(carry), col("block") === col("c_block"))
-      // greatest() skips nulls (returns null only when BOTH are — the
-      // very first arrival, which by definition cannot be late)
-      .withColumn("wm_before", greatest(col("local_max"), col("carry_max")))
+      unix_micros(col("ts")).as("ts_us"))
+    // an empty prefix is null: the very first arrival cannot be late
+    Scan.exclusive(e, Nil, "event_id", "ts_us", blockWidth, Scan.Max,
+        "wm_before")
       .withColumn("late_us",
         when(col("wm_before").isNull, lit(0L))
           .otherwise(greatest(lit(0L), col("wm_before") - col("ts_us"))))
@@ -3474,7 +3455,6 @@ object Analytics {
     * value-histogram-sized frame — the raw rows are never ranked.
     */
   def mannWhitney(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val vals = df.filter(col("user_id").isNotNull &&
         col("event_type") === "purchase")
       .select((col("user_id") % 2).as("arm"),
@@ -3482,13 +3462,7 @@ object Analytics {
     val hist = vals.groupBy(col("cents"))
       .agg(count(lit(1)).as("c_total"),
         sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("c_a"))
-    val ranked = hist
-      .withColumn("cum", sum(col("c_total")).over(
-        Window.orderBy(col("cents"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      // ×2 mid-rank of a tied block: (first rank) + (last rank) =
-      // 2(cum − c_total) + c_total + 1
-      .withColumn("r2mid", expr("2 * (cum - c_total) + c_total + 1"))
+    val ranked = Scan.midRank2(hist, "cents", "c_total", "r2mid")
     val agg = ranked.agg(
       coalesce(sum(col("c_a")), lit(0L)).as("n_a"),
       coalesce(sum(col("c_total") - col("c_a")), lit(0L)).as("n_b"),

@@ -448,6 +448,11 @@ object Corpus {
       .orderBy(col("source"))
   }
 
+  /** (doc_id, source, n_tokens): the token sizing every draw scans. */
+  private def docTokens(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("source"),
+      size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
+
   /** Materialize the [[sourceMixture]] draw — the step between computing
     * temperature weights and actually emitting a training corpus: per
     * source, documents are taken in deterministic doc_id order while the
@@ -459,60 +464,19 @@ object Corpus {
     * absent from the report.
     *
     * Shape at 100 TB: the target table is dimension-sized (broadcast),
-    * and the per-source running sum is computed HIERARCHICALLY, the same
-    * shape [[packTokenBudget]] uses — a window partitioned by source
-    * alone would pull each source's entire slice (terabytes, sources are
-    * dozens) through one task. Instead docs are range-sharded on
-    * `doc_id div shardWidth` (contiguous id ranges, so shard-local
-    * prefix sums compose by addition): the corpus-sized window is
-    * partitioned by (source, shard) — data-parallel across shards — and
-    * the cross-shard carry is a per-(source, shard) total table
-    * (dimension × shard-count rows, tuned by `shardWidth`), prefix-
-    * summed per source over shard rank (tiny) and broadcast back. The
-    * reconstructed `cum_before` is exactly the sequential per-source
-    * running sum — integer arithmetic, so the decomposition is
-    * bit-identical to the single-window formulation the oracle runs.
+    * and the per-source running sum `cum_before` is [[Scan.exclusive]]
+    * keyed on source — a window partitioned by source alone would pull
+    * each source's entire slice through one task; `shardWidth` is the
+    * kernel's block width.
     */
-  /** Per-doc `cum_before` (tokens of all lower-doc_id docs of the same
-    * source) via the hierarchical prefix sum shared by the mixture
-    * draws: shard-local running-sum windows on (source, doc_id div
-    * shardWidth) + a broadcast per-(source, shard) carry table. Exact
-    * integer arithmetic — bit-identical to the sequential per-source
-    * window at every shard width (pinned in CorpusSpec).
-    */
-  private def sourceCumBefore(docs: DataFrame, shardWidth: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val d = docs
-      .select(col("doc_id"), col("source"),
-        expr(s"doc_id div $shardWidth").as("mix_shard"),
-        size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
-    // shard-local running sum: partition (source, shard), data-parallel
-    val wLocal = Window.partitionBy(col("source"), col("mix_shard"))
-      .orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // cross-shard carry: total tokens of all LOWER shards of the same
-    // source — computed on the (source, shard) total table, which is
-    // dimension-sized, then broadcast onto the doc stream
-    val wCarry = Window.partitionBy(col("source")).orderBy(col("mix_shard"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val shardOffsets = d.groupBy(col("source"), col("mix_shard"))
-      .agg(sum(col("n_tokens")).as("shard_tokens"))
-      .select(col("source"), col("mix_shard"),
-        coalesce(sum(col("shard_tokens")).over(wCarry), lit(0L)).as("shard_offset"))
-    d
-      .withColumn("cum_in_shard", sum(col("n_tokens")).over(wLocal) - col("n_tokens"))
-      .join(broadcast(shardOffsets), Seq("source", "mix_shard"))
-      .withColumn("cum_before", col("shard_offset") + col("cum_in_shard"))
-  }
-
   def applyMixtureBudget(
       docs: DataFrame,
       tokenBudget: Long = 1000000L,
       shardWidth: Long = 65536L): DataFrame = {
-    require(shardWidth > 0, "shard width must be positive")
     val targets = sourceMixture(docs, tokenBudget)
       .select(col("source"), col("target_tokens"))
-    sourceCumBefore(docs, shardWidth)
+    Scan.exclusive(docTokens(docs), Seq("source"), "doc_id", "n_tokens",
+        shardWidth, Scan.Sum, "cum_before")
       .join(broadcast(targets), "source")
       .filter(col("cum_before") < col("target_tokens"))
       .groupBy(col("source"), col("target_tokens"))
@@ -539,7 +503,7 @@ object Corpus {
     * document of the target.
     *
     * Shape at 100 TB: identical to [[applyMixtureBudget]] — the
-    * hierarchical [[sourceCumBefore]] prefix sum (no per-source
+    * hierarchical [[Scan.exclusive]] prefix sum (no per-source
     * single-task window), a broadcast dimension-sized target table,
     * row-local copy arithmetic. Emitting one row per doc (not per
     * copy) keeps the output corpus-sized regardless of epoch counts.
@@ -548,14 +512,14 @@ object Corpus {
       docs: DataFrame,
       tokenBudget: Long = 1000000L,
       shardWidth: Long = 65536L): DataFrame = {
-    require(shardWidth > 0, "shard width must be positive")
     val targets = sourceMixture(docs, tokenBudget)
       .select(col("source"), col("n_tokens").as("source_tokens"),
         col("target_tokens"))
       .filter(col("source_tokens") > 0)
       .withColumn("n_epochs_full", expr("target_tokens div source_tokens"))
       .withColumn("rem_tokens", expr("target_tokens % source_tokens"))
-    sourceCumBefore(docs, shardWidth)
+    Scan.exclusive(docTokens(docs), Seq("source"), "doc_id", "n_tokens",
+        shardWidth, Scan.Sum, "cum_before")
       .join(broadcast(targets), "source")
       .withColumn("n_copies",
         col("n_epochs_full") +
@@ -909,40 +873,6 @@ object Corpus {
       .orderBy(col("doc_id"))
   }
 
-  /** Per-doc GLOBAL `cum_before` (tokens of all lower-doc_id docs,
-    * corpus-wide) — the global-order sibling of [[sourceCumBefore]], same
-    * hierarchical decomposition: shard-local running-sum windows on
-    * `doc_id div shardWidth` (contiguous id ranges, so shard prefixes
-    * compose by addition) + a prefix-summed per-shard carry table
-    * (shard-count rows) broadcast back onto the doc stream. A single
-    * window ordered by doc_id alone would pull the ENTIRE corpus through
-    * one task; this shape is data-parallel across shards and
-    * integer-exact, bit-identical to the sequential window the oracle
-    * runs (pinned in CorpusSpec at widths 1/3/64).
-    */
-  private def globalCumBefore(docs: DataFrame, shardWidth: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val d = docs
-      .select(col("doc_id"), col("source"),
-        expr(s"doc_id div $shardWidth").as("samp_shard"),
-        size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
-    val wLocal = Window.partitionBy(col("samp_shard"))
-      .orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // carry over LOWER shards: computed on the shard-total table (one row
-    // per shard — dimension-sized however big the corpus), then broadcast
-    val wCarry = Window.orderBy(col("samp_shard"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val shardOffsets = d.groupBy(col("samp_shard"))
-      .agg(sum(col("n_tokens")).as("shard_tokens"))
-      .select(col("samp_shard"),
-        coalesce(sum(col("shard_tokens")).over(wCarry), lit(0L)).as("shard_offset"))
-    d
-      .withColumn("cum_in_shard", sum(col("n_tokens")).over(wLocal) - col("n_tokens"))
-      .join(broadcast(shardOffsets), Seq("samp_shard"))
-      .withColumn("cum_before", col("shard_offset") + col("cum_in_shard"))
-  }
-
   /** Systematic (low-discrepancy) token-weighted sampling: place `k`
     * equally-spaced sampling positions over the corpus's total token mass
     * `W` and give each document one copy per position falling inside its
@@ -960,9 +890,9 @@ object Corpus {
     * ulp — every step is integer arithmetic the oracle reproduces
     * bit-identically.
     *
-    * Shape at 100 TB: the prefix sum is the hierarchical
-    * [[globalCumBefore]] (data-parallel across id shards, no global
-    * sort, no corpus-through-one-task window); the total `W` is a 1-row
+    * Shape at 100 TB: the prefix sum is [[Scan.exclusive]] with no key
+    * (data-parallel across id shards, no global sort, no
+    * corpus-through-one-task window); the total `W` is a 1-row
     * broadcast; the copy arithmetic is row-local, widened to
     * DECIMAL(38,0) so `cum·k` cannot overflow at petabyte token counts
     * (BIGINT dies at W·k > 9.2e18 — e.g. 1e13 tokens × 1e6 samples).
@@ -973,11 +903,10 @@ object Corpus {
       k: Long = 200L,
       shardWidth: Long = 65536L): DataFrame = {
     require(k > 0, "sample size must be positive")
-    require(shardWidth > 0, "shard width must be positive")
-    val total = docs
-      .select(size(TextAnalysis.tokens(col("text"))).cast("long").as("n"))
-      .agg(sum(col("n")).as("w_total"))
-    globalCumBefore(docs, shardWidth)
+    val sized = docTokens(docs)
+    val total = sized.agg(sum(col("n_tokens")).as("w_total"))
+    Scan.exclusive(sized, Nil, "doc_id", "n_tokens", shardWidth, Scan.Sum,
+        "cum_before")
       .crossJoin(broadcast(total))
       .withColumn("n_copies",
         expr(s"CAST(cum_before + n_tokens AS DECIMAL(38,0)) * $k DIV w_total") -

@@ -1291,8 +1291,11 @@ object Graph {
     * Output: one row per component — (component_id = min node, n_nodes,
     * n_edges within), largest first.
     *
-    * Shape at 100 TB: the corpus-scale work is the one shared pair
-    * build; the kernel's rounds move only the node-sized label frame.
+    * Shape at 100 TB: the corpus-scale work is the pair build; the
+    * kernel's rounds move only the node-sized label frame. This entry
+    * point caches nothing: the kernel stages the pairs for its rounds
+    * and the edge count builds them again, so a caller that already
+    * holds a cached pair frame calls [[connectedComponentsFromPairs]].
     * Convergence is enforced — a non-converged census throws rather than
     * emitting wrong components.
     */
@@ -1300,8 +1303,7 @@ object Graph {
       lineitem: DataFrame, minSupport: Long = 2, maxRounds: Int = 30)
       : DataFrame =
     connectedComponentsFromPairs(
-      Relational.partPairCounts(lineitem, minSupport)
-        .persist(StorageLevel.MEMORY_AND_DISK), maxRounds)
+      Relational.partPairCounts(lineitem, minSupport), maxRounds)
 
   /** [[connectedComponents]] over a prebuilt (ideally cached) pair frame. */
   def connectedComponentsFromPairs(

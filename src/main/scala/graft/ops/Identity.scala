@@ -30,19 +30,26 @@ object Identity {
     *     Overrunning maxRounds raises rather than emitting a half-merged
     *     identity table.
     *  3. The report collapses to one row per entity: canonical id (the
-    *     min member), member count, distinct-key count.
+    *     min member), member count, distinct-key count — materialized
+    *     before the call returns, when the cached input is released.
     */
   def resolveEntities(recordKeys: DataFrame, maxRounds: Int = 20): DataFrame = {
     val keyed = recordKeys.select(col("record_id"), col("key")).persist()
-    val labels = resolveEntityLabels(keyed, maxRounds)
-    val members = labels.groupBy(col("label"))
-      .agg(count(lit(1)).as("n_records"))
-    val keys = keyed.join(labels, "record_id")
-      .groupBy(col("label"))
-      .agg(countDistinct(col("key")).as("n_keys"))
-    members.join(keys, "label")
-      .select(col("label").as("entity_id"), col("n_records"), col("n_keys"))
-      .orderBy(col("entity_id"))
+    // the report is materialized before keyed is released, so the cache
+    // never outlives the call
+    val report =
+      try {
+        val labels = resolveEntityLabels(keyed, maxRounds)
+        val members = labels.groupBy(col("label"))
+          .agg(count(lit(1)).as("n_records"))
+        val keys = keyed.join(labels, "record_id")
+          .groupBy(col("label"))
+          .agg(countDistinct(col("key")).as("n_keys"))
+        members.join(keys, "label")
+          .select(col("label").as("entity_id"), col("n_records"), col("n_keys"))
+          .localCheckpoint()
+      } finally keyed.unpersist(blocking = false)
+    report.orderBy(col("entity_id"))
   }
 
   /** The (record_id, label) frame [[resolveEntities]] summarizes —
@@ -136,7 +143,10 @@ object Identity {
   def goldenRecords(events: DataFrame, maxRounds: Int = 20): DataFrame = {
     val keyed = eventUserKeys(events)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val labels = resolveEntityLabels(keyed, maxRounds)
+    // the labels come back materialized, so nothing reads keyed after
+    val labels =
+      try resolveEntityLabels(keyed, maxRounds)
+      finally keyed.unpersist(blocking = false)
     val perUser = events.filter(col("user_id").isNotNull)
       .select(col("user_id").as("record_id"), col("event_id"),
         col("event_type"), unix_micros(col("ts")).as("tsu"),

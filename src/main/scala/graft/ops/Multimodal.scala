@@ -243,33 +243,19 @@ object Multimodal {
     * deterministic and append-friendly (new assets only ever extend the
     * tail shard).
     *
-    * Shape at 100 TB: the prefix sum is HIERARCHICAL — block-local
-    * windows (asset_id div blockWidth) plus a broadcast carry of
-    * block totals — the [[graft.ops.Corpus]] `globalCumBefore`
-    * discipline; the asset table never rides a single-partition window.
-    * The report aggregates onto the shard dimension.
+    * Shape at 100 TB: the prefix sum is [[Scan.exclusive]] with no key
+    * (`blockWidth` is its block width); the asset table never rides a
+    * single-partition window. The report aggregates onto the shard
+    * dimension.
     */
   def shardPlan(
       assets: DataFrame,
       shardCapacityBytes: Long = 4096L,
       blockWidth: Long = 256L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val sized = assets.select(col("asset_id"),
-      length(col("content")).cast("long").as("n_bytes"),
-      expr(s"asset_id div $blockWidth").as("block"))
-    val wLocal = Window.partitionBy(col("block")).orderBy(col("asset_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wBlocks = Window.orderBy(col("block"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = sized.groupBy(col("block"))
-      .agg(sum(col("n_bytes")).as("block_bytes"))
-      .withColumn("carry_before",
-        coalesce(sum(col("block_bytes")).over(wBlocks), lit(0L)))
-      .select(col("block").as("c_block"), col("carry_before"))
-    sized
-      .withColumn("local_cum", sum(col("n_bytes")).over(wLocal) - col("n_bytes"))
-      .join(broadcast(carry), col("block") === col("c_block"))
-      .withColumn("cum_before", col("carry_before") + col("local_cum"))
+      length(col("content")).cast("long").as("n_bytes"))
+    Scan.exclusive(sized, Nil, "asset_id", "n_bytes", blockWidth, Scan.Sum,
+        "cum_before")
       .withColumn("shard_id",
         expr(s"cum_before div $shardCapacityBytes"))
       .groupBy(col("shard_id"))

@@ -1076,8 +1076,8 @@ object Relational {
     * [[anovaF]] the parametric k-group test; KW is what a heavy-tailed
     * spend distribution actually calls for (ANOVA's F leans on
     * normality that cents data violates). ×2 mid-ranks over the global
-    * spend value domain (the [[graft.ops.Analytics.spearman]]
-    * machinery), H = 3·Σ_g(R2_g²/n_g)/(n(n+1)) − 3(n+1) on the doubled
+    * spend value domain ([[Scan.midRank2]]),
+    * H = 3·Σ_g(R2_g²/n_g)/(n(n+1)) − 3(n+1) on the doubled
     * ranks, divided by the tie correction 1 − Σ(t³−t)/(n³−n).
     *
     * Exactness: rank sums and the tie polynomial are exact integers;
@@ -1088,17 +1088,13 @@ object Relational {
     * rank window, nation-dimension aggregates, 1-row statistic.
     */
   def kruskalWallis(orders: DataFrame, customer: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val per = orders.groupBy(col("o_custkey"))
       .agg(sum((money("o_totalprice") * 100).cast("long")).as("x"))
       .join(broadcastIfSmall(customer.select(col("c_custkey").as("o_custkey"),
         col("c_nationkey").as("nation"))), "o_custkey")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val w = Window.orderBy(col("x")).rowsBetween(Window.unboundedPreceding, -1)
-    val ranks = per.groupBy(col("x")).agg(count(lit(1)).as("cnt"))
-      .withColumn("below", coalesce(sum(col("cnt")).over(w), lit(0L)))
-      .select(col("x"), col("cnt"),
-        (lit(2L) * col("below") + col("cnt") + 1L).as("r2"))
+    val ranks = Scan.midRank2(
+      per.groupBy(col("x")).agg(count(lit(1)).as("cnt")), "x", "cnt", "r2")
     val groups = per.join(ranks.select(col("x"), col("r2")), "x")
       .groupBy(col("nation"))
       .agg(sum(col("r2")).as("r2g"), count(lit(1)).as("ng"))

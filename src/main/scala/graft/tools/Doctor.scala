@@ -15,7 +15,7 @@ import graft.ops.Tables
   *     (raw-nanos LongType / TIMESTAMP_NTZ / TIMESTAMP), and says WHICH
   *     — so a future drift is a one-line diagnosis, not an excavation;
   *  3. the flagship query plans AND returns rows;
-  *  4. session confs the entry points rely on are in force.
+  *  4. every conf `graft.Session.local` sets (`Session.confs`) is in force.
   *
   * Exit code 0 = ready; 1 = at least one check failed (wired for CI).
   */
@@ -51,10 +51,11 @@ object Doctor {
       }
     }
     check("session confs") {
-      require(spark.conf.get("spark.sql.session.timeZone") == "UTC", "timezone not UTC")
-      require(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true",
-        "nanosAsLong unset")
-      "UTC + nanosAsLong + inferTimestampNTZ=false"
+      val want = graft.Session.confs(graft.Session.envCpus)
+      val wrong = want.filter { case (k, v) => spark.conf.getOption(k) != Some(v) }
+      require(wrong.isEmpty, wrong.map { case (k, v) =>
+        s"$k=${spark.conf.getOption(k).orNull} (want $v)" }.mkString(", "))
+      s"${want.size} factory confs in force"
     }
     check("flagship query") {
       val n = graft.SparkEntry.entry(spark).count()

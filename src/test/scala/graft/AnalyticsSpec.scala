@@ -561,9 +561,14 @@ class AnalyticsSpec extends SparkTestBase {
     val y = out.find(_.getAs[String]("event_type") == "y").get
     assert(y.getAs[Long]("n_late") == 0L && y.getAs[Long]("max_late_us") == 0L)
     // the hierarchical decomposition is exact: any block width, same answer
-    val alt = graft.ops.Analytics.disorderProfile(events, blockWidth = 1000L)
-      .collect()
-    assert(out.map(_.toSeq).toSeq == alt.map(_.toSeq).toSeq)
+    // (1: every prefix comes from the carry; Long.MaxValue: one block, the
+    // sequential window)
+    Seq(1L, 1000L, Long.MaxValue).foreach { w =>
+      val alt = graft.ops.Analytics.disorderProfile(events, blockWidth = w)
+        .collect()
+      assert(out.map(_.toSeq).toSeq == alt.map(_.toSeq).toSeq,
+        s"blockWidth=$w diverged")
+    }
   }
 
   test("kAnonymity: cell risk and user diversity counted per threshold") {

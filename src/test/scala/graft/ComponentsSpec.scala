@@ -105,4 +105,24 @@ class ComponentsSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(out.toSeq == Seq((0L, n, n - 1)))
   }
+
+  test("resolveEntities, goldenRecords and connectedComponents leave no cache behind") {
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val rk = Seq((1L, "a"), (2L, "a"), (3L, "b"), (4L, "b"))
+      .toDF("record_id", "key")
+    val events = Seq(
+      (10L, 1L, "view", 2.0, new java.sql.Timestamp(86400000L)),
+      (11L, 98L, "click", 1.0, new java.sql.Timestamp(2 * 86400000L))
+    ).toDF("event_id", "user_id", "event_type", "value", "ts")
+    val li = (for (o <- 1L to 2L; p <- 1L to 3L) yield (o, p))
+      .toDF("l_orderkey", "l_partkey")
+    spark.catalog.clearCache()
+    assert(Identity.resolveEntities(rk).collect().length == 2)
+    assert(cache.isEmpty, "resolveEntities left a cached frame")
+    assert(Identity.goldenRecords(events).collect().length == 1)
+    assert(cache.isEmpty, "goldenRecords left a cached frame")
+    assert(Graph.connectedComponents(li).collect().length == 1)
+    assert(cache.isEmpty, "connectedComponents left a cached frame")
+  }
 }

@@ -384,16 +384,16 @@ class PlanShapeSpec extends SparkTestBase {
 
   test("systematic sample: sharded global prefix sum — corpus never sorts globally") {
     // the corpus-sized running-sum window is partitioned by the id shard:
-    // its sort is partition-local [samp_shard, doc_id]; the carry table
+    // its sort is partition-local [scan_block, doc_id]; the carry table
     // and the 1-row total broadcast onto the stream; a corpus-wide
     // single-task window (sort [doc_id] with no shard prefix, global or
     // not, ahead of the output orderBy) must not exist
     val p = plan(graft.ops.Corpus.systematicSample(
       graft.ops.TextAnalysis.documents(spark, sf), k = 200L, shardWidth = 64L))
     assert(
-      "Sort \\[samp_shard#\\d+L ASC NULLS FIRST, doc_id#\\d+L ASC NULLS FIRST\\], false"
+      "Sort \\[scan_block#\\d+L ASC NULLS FIRST, doc_id#\\d+L ASC NULLS FIRST\\], false"
         .r.findFirstIn(p).isDefined,
-      s"corpus window must sort (samp_shard, doc_id) partition-locally:\n$p")
+      s"corpus window must sort (scan_block, doc_id) partition-locally:\n$p")
     assert("BroadcastHashJoin".r.findAllIn(p).length >= 1,
       s"carry table must broadcast onto the corpus stream:\n$p")
     assert(!p.contains("Exchange hashpartitioning(doc_id"),
@@ -442,11 +442,11 @@ class PlanShapeSpec extends SparkTestBase {
     assert(!p.contains("Exchange hashpartitioning(doc_id"),
       s"corpus must not shuffle on doc_id:\n$p")
     // the corpus-sized running-sum window is partitioned (source, shard):
-    // its sort is a partition-local [source, mix_shard, doc_id] sort
+    // its sort is a partition-local [source, scan_block, doc_id] sort
     assert(
-      "Sort \\[source#\\d+ ASC NULLS FIRST, mix_shard#\\d+L ASC NULLS FIRST, doc_id#\\d+L ASC NULLS FIRST\\], false"
+      "Sort \\[source#\\d+ ASC NULLS FIRST, scan_block#\\d+L ASC NULLS FIRST, doc_id#\\d+L ASC NULLS FIRST\\], false"
         .r.findFirstIn(p).isDefined,
-      s"corpus window must sort (source, mix_shard, doc_id) partition-locally:\n$p")
+      s"corpus window must sort (source, scan_block, doc_id) partition-locally:\n$p")
     // the round-6 scale finding: a window partitioned by source ALONE over
     // the doc stream funnels a whole source through one task — its
     // signature sort [source, doc_id] must not appear anywhere

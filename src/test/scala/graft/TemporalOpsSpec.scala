@@ -408,10 +408,14 @@ class TemporalOpsSpec extends SparkTestBase {
       assert(r.getAs[Long]("shard_bytes") <= 4096L + maxAsset)
     }
     // decomposition is width-invariant: a different block width yields
-    // the IDENTICAL plan (the hierarchical sum is exact, not approximate)
-    val alt = graft.ops.Multimodal.shardPlan(assets, blockWidth = 256L)
-      .collect()
-    assert(plan.map(_.toSeq).toSeq == alt.map(_.toSeq).toSeq)
+    // the IDENTICAL plan (the hierarchical sum is exact, not approximate);
+    // 1 takes every prefix from the carry, Long.MaxValue is one block
+    Seq(1L, 256L, Long.MaxValue).foreach { w =>
+      val alt = graft.ops.Multimodal.shardPlan(assets, blockWidth = w)
+        .collect()
+      assert(plan.map(_.toSeq).toSeq == alt.map(_.toSeq).toSeq,
+        s"blockWidth=$w diverged")
+    }
   }
 
   // ---- streaming new-user twin --------------------------------------------
