@@ -104,7 +104,7 @@ object Analytics {
         round(sum(col("value").cast("decimal(12,2)")).cast("double") /
           count(lit(1)), 4).as("avg_value"),
         unix_micros(max(col("ts"))).as("latest_event_us"))
-      .orderBy(desc("event_count"), col("event_type"))
+      .transform(Par.sortSmall(desc("event_count"), col("event_type")))
 
   /** A2 (README.md:197-205): data-quality histogram. The testdata events
     * table has no stored score, so the score is derived inline with the
@@ -118,7 +118,7 @@ object Analytics {
       .agg(
         count(lit(1)).as("record_count"),
         round(avg(length(col("props"))), 4).as("avg_message_length"))
-      .orderBy(desc("data_quality_score"))
+      .transform(Par.sortSmall(desc("data_quality_score")))
 
   /** The §2.3-P9 scoring formula applied to the events table's columns. */
   val derivedScore: Column = {
@@ -199,14 +199,14 @@ object Analytics {
   def typeCounts(df: DataFrame): DataFrame =
     df.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), col("event_type"))
+      .transform(Par.sortSmall(desc("n"), col("event_type")))
 
   /** A6 (web-application.py:288-290): events per hour-of-day. */
   def hourlyCounts(df: DataFrame): DataFrame =
     df.withColumn("hour_of_day", hour(col("ts")).cast("long"))
       .groupBy(col("hour_of_day"))
       .agg(count(lit(1)).as("n"))
-      .orderBy(col("hour_of_day"))
+      .transform(Par.sortSmall(col("hour_of_day")))
 
   /** Hourly volume anomaly score — the monitoring readout a pipeline
     * operator watches: per (event_type, hour) count z-scored against the
@@ -254,7 +254,7 @@ object Analytics {
       .withColumn("is_anomaly", abs(col("z_e4")) >= 30000L)
       .select(col("event_type"), col("hour_us"), col("c"), col("n"),
         col("z_e4"), col("is_anomaly"))
-      .orderBy(col("event_type"), col("hour_us"))
+      .transform(Par.sortSmall(col("event_type"), col("hour_us")))
   }
 
   /** A7+A8+A9 (web-application.py:309-322): dashboard metrics — total
@@ -301,7 +301,7 @@ object Analytics {
       .select(
         unix_micros(col("window.start")).as("window_start_us"),
         col("event_type"), col("n"), col("sum_value"))
-      .orderBy(col("window_start_us"), col("event_type"))
+      .transform(Par.sortSmall(col("window_start_us"), col("event_type")))
 
   /** W2 sliding variant: 1 h windows sliding every 30 min — each event
     * lands in two windows. Oracle form: epoch/1800 grid arithmetic.
@@ -310,7 +310,7 @@ object Analytics {
     df.groupBy(window(col("ts"), "1 hour", "30 minutes"))
       .agg(count(lit(1)).as("n"))
       .select(unix_micros(col("window.start")).as("window_start_us"), col("n"))
-      .orderBy(col("window_start_us"))
+      .transform(Par.sortSmall(col("window_start_us")))
 
   /** Time-series gap fill (absent in reference — the resample step a
     * metrics/feature pipeline runs before model input): a DENSE hourly
@@ -348,7 +348,7 @@ object Analytics {
           Window.partitionBy(col("event_type")).orderBy(col("hour_us"))
             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
           .as("filled_value"))
-      .orderBy(col("event_type"), col("hour_us"))
+      .transform(Par.sortSmall(col("event_type"), col("hour_us")))
   }
 
   /** W4 stretch (absent in reference — SURVEY §2.10): session windows.
@@ -392,7 +392,7 @@ object Analytics {
         .select(lit(op).as("op"), col("event_type"), col("n"))
     counted("except_all", early.exceptAll(late))
       .unionByName(counted("intersect_all", early.intersectAll(late)))
-      .orderBy(col("op"), col("event_type"))
+      .transform(Par.sortSmall(col("op"), col("event_type")))
   }
 
   /** §2.5 absent-in-reference aggregates, provided as engine surface:
@@ -406,7 +406,7 @@ object Analytics {
         round(median(col("value")), 4).as("median_value"),
         round(min(col("value")), 4).as("min_value"),
         round(max(col("value")), 4).as("max_value"))
-      .orderBy(col("event_type"))
+      .transform(Par.sortSmall(col("event_type")))
 
   /** Exact percentiles per type (linear interpolation — same formula as
     * DuckDB's quantile_cont; the engines' interpolations differ at the
@@ -422,7 +422,7 @@ object Analytics {
         round(expr("percentile(value, 0.5)"), 4).as("p50"),
         round(expr("percentile(value, 0.95)"), 4).as("p95"),
         round(expr("percentile(value, 0.99)"), 4).as("p99"))
-      .orderBy(col("event_type"))
+      .transform(Par.sortSmall(col("event_type")))
 
   /** Multiple DISTINCT aggregates in one pass — Catalyst plans this with
     * an Expand (one input row fans into one row per distinct clause),
@@ -435,7 +435,7 @@ object Analytics {
         countDistinct(col("user_id")).as("n_users"),
         countDistinct(to_date(col("ts"))).as("n_days"),
         count(lit(1)).as("n"))
-      .orderBy(col("event_type"))
+      .transform(Par.sortSmall(col("event_type")))
 
   /** Inter-event gaps per user via LAG — the time-series delta pattern:
     * one hash shuffle on user_id, per-partition sort, narrow everywhere
@@ -561,7 +561,7 @@ object Analytics {
       .select(
         unix_micros(col("report_day").cast("timestamp")).as("day_us"),
         col("window_days"), col("n_active"))
-      .orderBy(col("day_us"), col("window_days"))
+      .transform(Par.sortSmall(col("day_us"), col("window_days")))
   }
 
   /** Per-user event-type transition matrix (first-order Markov counts):
@@ -587,7 +587,7 @@ object Analytics {
       .withColumn("p_e4",
         expr("(n * 10000) div sum(n) OVER (PARTITION BY from_type)"))
       .select(col("from_type"), col("to_type"), col("n"), col("p_e4"))
-      .orderBy(col("from_type"), col("to_type"))
+      .transform(Par.sortSmall(col("from_type"), col("to_type")))
   }
 
   /** TRANSITION ENTROPY per source state — how PREDICTABLE is the next
@@ -625,7 +625,7 @@ object Analytics {
           |  cast(round(entropy_e6 / (ln(cast(n_next_types as double))
           |    * 1000000.0) * 10000) as bigint)
           |ELSE 0 END""".stripMargin))
-      .orderBy(col("from_type"))
+      .transform(Par.sortSmall(col("from_type")))
   }
 
   /** DuckDB twin of [[transitionEntropy]]. */
@@ -736,7 +736,7 @@ object Analytics {
       .groupBy(col("hour_of_day"))
       .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
       .agg(sum(col("value").cast("decimal(12,2)")).cast("double"))
-      .orderBy(col("hour_of_day"))
+      .transform(Par.sortSmall(col("hour_of_day")))
 
   /** collect_set surface: the distinct event types seen per user, sorted
     * for determinism and joined to a CSV string — the driver's pandas
@@ -1157,7 +1157,7 @@ object Analytics {
         Seq("type_b"))
       .select(col("type_a"), col("type_b"), col("n_a"), col("n_b"), col("n_both"),
         expr("n_both * 10000 div (n_a + n_b - n_both)").as("jaccard_e4"))
-      .orderBy(col("type_a"), col("type_b"))
+      .transform(Par.sortSmall(col("type_a"), col("type_b")))
   }
 
   /** Third-order event sequences (the step past [[eventTransitions]]'
@@ -1216,7 +1216,7 @@ object Analytics {
       .select(col("event_type"), unix_micros(col("day")).as("day_us"),
         col("n"), col("sum_e4"),
         expr("sum_e4 div n").as("avg_e4"), col("latest_us"))
-      .orderBy(col("event_type"), col("day_us"))
+      .transform(Par.sortSmall(col("event_type"), col("day_us")))
   }
 
   /** Population Stability Index — THE production drift metric (credit-
@@ -1277,7 +1277,7 @@ object Analytics {
     wide.groupBy(col("event_type"))
       .agg(max(col("n0")).as("n_expected"), max(col("n1")).as("n_actual"),
         sum(col("contrib_e4")).as("psi_e4"))
-      .orderBy(col("event_type"))
+      .transform(Par.sortSmall(col("event_type")))
   }
 
   /** JENSEN–SHANNON DIVERGENCE DRIFT — the bounded, symmetric member of
@@ -1333,7 +1333,7 @@ object Analytics {
       .groupBy(col("event_type"))
       .agg(max(col("n0")).as("n_expected"), max(col("n1")).as("n_actual"),
         sum(col("contrib_e6")).as("jsd_e6"))
-      .orderBy(col("event_type"))
+      .transform(Par.sortSmall(col("event_type")))
   }
 
   /** DuckDB twin of [[jsdDrift]] — the q_psi_drift CTE shape with the
@@ -1506,7 +1506,7 @@ object Analytics {
                |  * 1000000
                |  div (CAST(n AS DECIMAL(38,0)) * rt * ct)""".stripMargin)
           .as("contrib_e6"))
-      .orderBy(col("event_type"), col("dow"))
+      .transform(Par.sortSmall(col("event_type"), col("dow")))
   }
 
   /** CRAMÉR'S V over the [[chiSquare]] contingency table — the effect
@@ -1732,7 +1732,7 @@ object Analytics {
           .as("twap_value"),
         round(col("csum").cast("double") / col("n_holds") / 100.0, 6)
           .as("plain_avg"))
-      .orderBy(col("event_type"))
+      .transform(Par.sortSmall(col("event_type")))
   }
 
   /** Robust outlier screen per event type: median + MAD (median absolute
@@ -1793,7 +1793,7 @@ object Analytics {
         round(col("med2x") / 200.0, 4).as("median_value"),
         round(col("mad4x") / 400.0, 4).as("mad_value"),
         col("n_outliers"))
-      .orderBy(col("event_type"))
+      .transform(Par.sortSmall(col("event_type")))
   }
 
   /** Entry→exit flow matrix: for each user, the FIRST and LAST event
@@ -1817,7 +1817,7 @@ object Analytics {
           .getField("event_type").as("exit_type"))
       .groupBy(col("entry_type"), col("exit_type"))
       .agg(count(lit(1)).as("n_users"))
-      .orderBy(col("entry_type"), col("exit_type"))
+      .transform(Par.sortSmall(col("entry_type"), col("exit_type")))
 
   /** Cohort lifetime value: cumulative purchase revenue per first-touch
     * cohort as the cohort ages — the money companion to
@@ -2388,7 +2388,7 @@ object Analytics {
         sum(when(col("to_type") === col("predicted"), col("n_eval"))
           .otherwise(0L)).as("n_hits"))
       .withColumn("acc_e4", expr("n_hits * 10000 div n_eval"))
-      .orderBy(col("from_type"))
+      .transform(Par.sortSmall(col("from_type")))
   }
 
   /** Sample-ratio-mismatch (SRM) gate — the sanity check that must pass
@@ -2886,7 +2886,7 @@ object Analytics {
         max(col("late_us")).as("max_late_us"),
         expr("sum(late_us) div count(1)").as("avg_late_us"))
       .withColumn("late_share_e4", expr("n_late * 10000 div n_events"))
-      .orderBy(col("event_type"))
+      .transform(Par.sortSmall(col("event_type")))
   }
 
   /** Portable order-free table checksum — the migration-validation
@@ -2937,7 +2937,7 @@ object Analytics {
       .agg(count(lit(1)).as("n_rows"),
         expr(s"pmod(sum(h), ${ChecksumM}L)").as("checksum"))
       .withColumn("event_type", coalesce(col("event_type"), lit("TOTAL")))
-      .orderBy(col("event_type"))
+      .transform(Par.sortSmall(col("event_type")))
   }
 
   /** DuckDB oracle for [[tableChecksum]]. */
@@ -3243,7 +3243,7 @@ object Analytics {
       .select(col("event_type"), col("n_c"), col("naive_e4"),
         col("loo_min_e4"), col("loo_max_e4"), col("loo_mean_e4"),
         col("max_leak_gap_e4"))
-      .orderBy(col("event_type"))
+      .transform(Par.sortSmall(col("event_type")))
   }
 
   /** DuckDB oracle for [[targetEncoding]]. */
@@ -4475,7 +4475,7 @@ object Analytics {
     hours.join(contrib, Seq("rb"), "left")
       .select((col("rb") * 3600000000L).as("hour_us"),
         coalesce(col("n_active"), lit(0L)).as("n_active"))
-      .orderBy(col("hour_us"))
+      .transform(Par.sortSmall(col("hour_us")))
   }
 
   /** DuckDB oracle for [[slidingDistinct]] — the naive per-readout
@@ -5208,7 +5208,7 @@ object Analytics {
         "CAST(round(CAST(s AS DOUBLE) / CAST(n_hours AS DOUBLE) * 1000000) AS BIGINT) AS mean_e6",
         "CAST(round(((CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n_hours AS DOUBLE)) / (CAST(n_hours AS DOUBLE) - 1.0)) / (CAST(s AS DOUBLE) / CAST(n_hours AS DOUBLE)) * 1000000) AS BIGINT) AS dispersion_e6")
       .withColumn("overdispersed", col("dispersion_e6") > 1500000L)
-      .orderBy(col("event_type"))
+      .transform(Par.sortSmall(col("event_type")))
   }
 
   /** DuckDB oracle for [[dispersionIndex]] — identical collapse and

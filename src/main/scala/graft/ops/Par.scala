@@ -118,23 +118,71 @@ private[graft] object Par {
   private val scanParts =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Int]
 
-  /** `df` MUST be exchange-free (a scan, optionally filtered/projected):
-    * the partition-count probe plans `df.rdd`, which on a frame with
-    * exchanges could trigger adaptive stage execution. Pass a stable
-    * `cacheKey` (e.g. the source path) to memoize the probe.
+  /** The session's scan-parallelism floor (see the object doc). */
+  private def floor(sess: SparkSession): Int =
+    sess.conf.getOption(MinScanParallelismKey).map(_.toInt)
+      .getOrElse(sess.sparkContext.defaultParallelism)
+
+  /** `df`'s partition count, memoized under a non-empty `cacheKey`. `df`
+    * MUST be exchange-free (a scan, optionally filtered/projected): the
+    * probe plans `df.rdd`, which on a frame with exchanges could trigger
+    * adaptive stage execution.
+    */
+  private def partitions(df: DataFrame, cacheKey: String): Int = {
+    scanParts.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
+    def probe() = df.rdd.getNumPartitions
+    if (cacheKey.isEmpty) probe()
+    else scanParts.getOrElseUpdate((df.sparkSession, cacheKey), probe())
+  }
+
+  /** Hash-widens an exchange-free `df` to the floor when its scan has
+    * fewer partitions. Pass a stable `cacheKey` (e.g. the source path) to
+    * memoize the probe.
     */
   def widen(df: DataFrame, key: Column, cacheKey: String = ""): DataFrame = {
-    val sess = df.sparkSession
-    val target = sess.conf.getOption(MinScanParallelismKey).map(_.toInt)
-      .getOrElse(sess.sparkContext.defaultParallelism)
-    if (target <= 1) df
-    else {
-      scanParts.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-      def probe() = df.rdd.getNumPartitions
-      val parts =
-        if (cacheKey.isEmpty) probe()
-        else scanParts.getOrElseUpdate((sess, cacheKey), probe())
-      if (parts >= target) df else df.repartition(target, key)
-    }
+    val target = floor(df.sparkSession)
+    if (target <= 1 || partitions(df, cacheKey) >= target) df
+    else df.repartition(target, key)
   }
+
+  /** [[widen]] for a per-row chain whose result must come out in `key`
+    * order: range-partitions an exchange-free `df` on `key` at
+    * max(scan partitions, floor), so a narrow chain followed by
+    * `sortWithinPartitions` on `key` is globally ordered. The range
+    * exchange's bound-sampling job reads only the scan's `key` column,
+    * where a final `orderBy` samples by running the whole chain. At width
+    * 1 `df` is returned unchanged: one partition is already in order.
+    */
+  def widenByRange(df: DataFrame, key: Column, cacheKey: String): DataFrame = {
+    val width = math.max(partitions(df, cacheKey), floor(df.sparkSession))
+    if (width <= 1) df else df.repartitionByRange(width, key)
+  }
+
+  /** ORDER BY for a result that is dimension-sized by construction: its
+    * grouping keys come from a closed domain (event type, hour, score,
+    * status, priority, nation, region, brand, windows over a fixed time
+    * range), so it has a bounded row count whatever the input size. Apply
+    * with `.transform(Par.sortSmall(keys: _*))`; the rows and their order
+    * are exactly those of `.orderBy(keys: _*)`.
+    *
+    * Why: `orderBy` requires a range distribution, so the planner inserts
+    * a range exchange above the final aggregate. That exchange is two
+    * jobs — one reads its whole child to sample sort bounds, one shuffles
+    * — and AQE re-plans the query after each, so a kilobyte aggregate
+    * ran 4 jobs where 2 do (scan + partial aggregate; final aggregate +
+    * sort + collect). Here the sort is local to one partition instead.
+    *
+    * The cost: `coalesce(1)` is narrow, so the whole stage between the
+    * last exchange and the sort — the final aggregate — runs in ONE task.
+    * Use it only where that stage's input is bounded by map tasks ×
+    * groups (partial aggregate rows of a closed-domain key), never for
+    * per-user, per-customer, per-order or per-event results: those keep
+    * `orderBy`. Windows and joins over the aggregate's output stay
+    * bounded; a window over raw rows whose partitioning the final
+    * aggregate reuses (no exchange between them) would not.
+    * `coalesce` rather than `repartition(1)`: the latter adds a shuffle,
+    * and with it a job, of its own.
+    */
+  def sortSmall(cols: Column*)(df: DataFrame): DataFrame =
+    df.coalesce(1).sortWithinPartitions(cols: _*)
 }

@@ -69,7 +69,7 @@ object Relational {
         round(sum(col("l_discount").cast("decimal(4,2)")).cast("double") /
           count(lit(1)), 4).as("avg_disc"),
         count(lit(1)).as("count_order"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
+      .transform(Par.sortSmall(col("l_returnflag"), col("l_linestatus")))
 
   /** Revenue per region/nation: 4-way join. Region (5 rows) and nation
     * (25) are unconditionally broadcast; customer SCALES with the fact
@@ -90,7 +90,7 @@ object Relational {
       .agg(
         sum(money("o_totalprice")).cast("double").as("revenue"),
         count(lit(1)).as("order_count"))
-      .orderBy(col("r_name"), col("n_name"))
+      .transform(Par.sortSmall(col("r_name"), col("n_name")))
 
   /** Revenue per part brand: fact⋈dim with broadcast part side. */
   def revenueByBrand(li: DataFrame, part: DataFrame): DataFrame =
@@ -101,7 +101,7 @@ object Relational {
         sum(money("l_extendedprice") * (lit(1.0).cast("decimal(4,2)") - col("l_discount").cast("decimal(4,2)")))
           .cast("double").as("revenue"),
         count(lit(1)).as("line_count"))
-      .orderBy(col("p_brand"))
+      .transform(Par.sortSmall(col("p_brand")))
 
   /** TPC-H Q3-shaped shipping priority: the one fact⋈fact join shape —
     * orders⋈lineitem shuffle on the order key (both sides large; no
@@ -187,9 +187,9 @@ object Relational {
       .rollup(col("o_orderstatus"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
         sum(money("o_totalprice")).cast("double").as("total"))
-      .orderBy(
+      .transform(Par.sortSmall(
         col("o_orderstatus").asc_nulls_first,
-        col("o_orderpriority").asc_nulls_first)
+        col("o_orderpriority").asc_nulls_first))
 
   /** Cube (grouping-sets family, completing [[orderStatusRollup]]):
     * all 2^2 grouping combinations of status × priority.
@@ -199,9 +199,9 @@ object Relational {
       .cube(col("o_orderstatus"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
         sum(money("o_totalprice")).cast("double").as("total"))
-      .orderBy(
+      .transform(Par.sortSmall(
         col("o_orderstatus").asc_nulls_first,
-        col("o_orderpriority").asc_nulls_first)
+        col("o_orderpriority").asc_nulls_first))
 
   /** Bivariate stats per group: Pearson correlation and sample
     * covariance of quantity vs price.
@@ -212,7 +212,7 @@ object Relational {
         count(lit(1)).as("n"),
         round(corr(col("l_quantity"), col("l_extendedprice")), 4).as("qty_price_corr"),
         round(covar_samp(col("l_quantity"), col("l_extendedprice")), 2).as("qty_price_covar"))
-      .orderBy(col("l_returnflag"))
+      .transform(Par.sortSmall(col("l_returnflag")))
 
   /** Correlated-style semi/anti join: customers with no orders (NOT
     * EXISTS → left-anti, broadcast the distinct key set when small).
@@ -258,7 +258,7 @@ object Relational {
         sum(money("l_extendedprice") * (lit(1.0).cast("decimal(4,2)") -
           col("l_discount").cast("decimal(4,2)"))).cast("double").as("revenue"),
         count(lit(1)).as("n_lines"))
-      .orderBy(col("cust_nation"), col("supp_nation"))
+      .transform(Par.sortSmall(col("cust_nation"), col("supp_nation")))
   }
 
   /** TPC-H Q18-shaped HAVING: orders whose total quantity exceeds the
@@ -350,7 +350,7 @@ object Relational {
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"),
         sum(money("o_totalprice")).cast("double").as("total"))
-      .orderBy(col("o_orderstatus"))
+      .transform(Par.sortSmall(col("o_orderstatus")))
 
   /** Discounted revenue as exact DECIMAL: (18,2) price × (4,2) discount
     * factor keeps 4 decimal places — no double rounding until the final
@@ -595,7 +595,7 @@ object Relational {
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_cust"),
         sum(money("c_acctbal")).cast("double").as("total_bal"))
-      .orderBy(col("c_mktsegment"))
+      .transform(Par.sortSmall(col("c_mktsegment")))
   }
 
   /** Market-basket pair mining: co-occurring part pairs within an order
@@ -1358,7 +1358,7 @@ object Relational {
         col("total_cents"),
         expr("ss * 10000 div (cast(total_cents as decimal(38,0)) * total_cents)")
           .as("hhi_bp"))
-      .orderBy(col("nation"))
+      .transform(Par.sortSmall(col("nation")))
   }
 
   /** DuckDB twin of [[hhiConcentration]]. */
@@ -1410,7 +1410,7 @@ object Relational {
         sum(col("x").cast("decimal(38,0)") * col("x")).as("sxx"))
       .selectExpr("brand", "n_obs",
         "CAST(round((CAST(n_obs AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / (CAST(n_obs AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) * 10000) AS BIGINT) AS elasticity_e4")
-      .orderBy(col("brand"))
+      .transform(Par.sortSmall(col("brand")))
   }
 
   /** DuckDB twin of [[priceElasticity]]. */
@@ -1927,7 +1927,7 @@ object Relational {
         round(expr("percentile(first_days, 0.9)"), 4).as("p90_first"),
         expr("sum(first_days) * 10000 div count(1)").as("mean_first_e4"),
         expr("percentile(full_days, 0.5)").as("p50_full"))
-      .orderBy(col("o_orderpriority"))
+      .transform(Par.sortSmall(col("o_orderpriority")))
   }
 
   /** TPC-H Q21-shaped sole-blame suppliers: suppliers that were the ONLY
@@ -2202,7 +2202,7 @@ object Relational {
           .as("n_delta_cust"),
         sum(when(col("term") === "delta_both", col("n")).otherwise(0L))
           .as("n_delta_both"))
-      .orderBy(col("c_nationkey"))
+      .transform(Par.sortSmall(col("c_nationkey")))
   }
 
   /** Cumulative Poisson(1) CDF thresholds scaled onto the [0, M) hash
@@ -2530,7 +2530,7 @@ object Relational {
       .select(col("p_brand"), col("rev0_e4"), col("rev1_e4"), col("delta_e4"),
         col("volume_effect_e4"), col("price_effect_e4"),
         col("mix_residual_e4"))
-      .orderBy(col("p_brand"))
+      .transform(Par.sortSmall(col("p_brand")))
   }
 
   /** DuckDB twin of [[revenueBridge]]. */
@@ -2761,7 +2761,7 @@ object Relational {
       .agg(count(lit(1)).as("n_rows"),
         min(col(keyCols.head)).as("min_key"),
         max(col(keyCols.head)).as("max_key"))
-      .orderBy(col("change_type"))
+      .transform(Par.sortSmall(col("change_type")))
   }
 
   /** DuckDB twin of the q_snapshot_diff wiring: old = orders without the

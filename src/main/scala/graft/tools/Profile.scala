@@ -6,11 +6,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 
 /** Dev tool (guide §1): per-stage breakdown of named queries.
   *
-  * Mirrors Bench's session + isolation discipline (clearCaches, untimed
-  * warm-up, timed second run) and prints, for the timed run only, each
-  * stage's wall time, task count, input/shuffle volumes — the evidence
-  * that says whether a slow query is compute, exchange, or job-count
-  * bound. Optionally dumps explain("formatted") next to the numbers.
+  * Mirrors Bench's session + isolation discipline (caches cleared before
+  * every pass, untimed warm-up, timed passes) and prints, for the first
+  * timed pass only, each stage's wall time, task count, input/shuffle
+  * volumes — the evidence that says whether a slow query is compute,
+  * exchange, or job-count bound. Optionally dumps explain("formatted") next to the numbers.
   *
   *   sbt "runMain graft.tools.Profile /root/testdata/sf0.1 q_a,q_b [plandir]"
   */
@@ -55,11 +55,16 @@ object Profile {
     // SPARK_GRAFT_PLAN_ONLY=1: dump explain("formatted") per query and
     // skip execution — the plans/r12 before/after artifact generator
     val planOnly = sys.env.get("SPARK_GRAFT_PLAN_ONLY").contains("1")
-    names.foreach { name =>
-      val fn = graft.SparkEntry.queries(name)
+    // every pass starts with empty caches, outside its timed window, so
+    // no pass reads (or re-caches) what an earlier one persisted
+    def clearCaches(): Unit = {
       spark.catalog.clearCache()
       graft.SparkEntry.clearCaches()
+    }
+    names.foreach { name =>
+      val fn = graft.SparkEntry.queries(name)
       planDir.foreach { d =>
+        clearCaches()
         Files.createDirectories(Paths.get(d))
         val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "")
         val df = fn(spark, sfDir)
@@ -70,6 +75,7 @@ object Profile {
       if (planOnly) {
         println(s"[profile] plan-only: $name")
       } else {
+      clearCaches()
       try { fn(spark, sfDir).count() } catch { case e: Throwable =>
         System.err.println(s"[profile] $name warm-up failed: ${e.getMessage}") }
       // THREE timed passes (the Bench throughput probe's best-of
@@ -77,6 +83,7 @@ object Profile {
       // host, so a single pass cannot support a before/after claim; the
       // min is the engine's capability. Stage breakdown is of pass 1.
       val times = (1 to 3).map { pass =>
+        clearCaches()
         System.gc()
         if (pass == 1) { stages.clear(); jobs = 0; record = true }
         spark.sparkContext.setJobDescription(s"profile:$name")

@@ -513,4 +513,40 @@ class EmptyInputSpec extends SparkTestBase {
     assert(hw.length == 7 &&
       hw.forall(_.isNullAt(hw.head.fieldIndex("forecast_e3"))))
   }
+
+  test("Par.sortSmall operators and q_event_pipeline return no rows on an empty events scan") {
+    import org.apache.spark.sql.functions.col
+    // a real scan that yields nothing, so the exchanges, the range
+    // partitioner's bound sampling and coalesce(1) all run over nothing
+    val none = Analytics.events(spark, "/root/testdata/sf0.001").filter(col("event_id") < 0L)
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "eventSummary" -> Analytics.eventSummary, "qualityHistogram" -> Analytics.qualityHistogram,
+      "typeCounts" -> Analytics.typeCounts, "hourlyCounts" -> Analytics.hourlyCounts,
+      "tumblingCounts" -> Analytics.tumblingCounts, "slidingCounts" -> Analytics.slidingCounts,
+      "valueStats" -> Analytics.valueStats, "hourlyAnomalies" -> (Analytics.hourlyAnomalies(_)),
+      "gapFillHourly" -> Analytics.gapFillHourly, "multisetOps" -> Analytics.multisetOps,
+      "valuePercentiles" -> Analytics.valuePercentiles,
+      "distinctProfile" -> Analytics.distinctProfile, "activeUsers" -> (Analytics.activeUsers(_)),
+      "eventTransitions" -> Analytics.eventTransitions,
+      "transitionEntropy" -> Analytics.transitionEntropy,
+      "hourlyTypePivot" -> Analytics.hourlyTypePivot, "typeAffinity" -> Analytics.typeAffinity,
+      "incrementalRollup" -> (Analytics.incrementalRollup(_)),
+      "psiDrift" -> (Analytics.psiDrift(_)), "jsdDrift" -> (Analytics.jsdDrift(_)),
+      "chiSquare" -> Analytics.chiSquare, "timeWeightedValue" -> Analytics.timeWeightedValue,
+      "madOutliers" -> (Analytics.madOutliers(_)), "entryExitFlows" -> Analytics.entryExitFlows,
+      "markovEval" -> (Analytics.markovEval(_)),
+      "disorderProfile" -> (Analytics.disorderProfile(_)),
+      "tableChecksum" -> Analytics.tableChecksum, "targetEncoding" -> Analytics.targetEncoding,
+      "dispersionIndex" -> Analytics.dispersionIndex,
+      "slidingDistinct" -> (Analytics.slidingDistinct(_)),
+      "eventPipeline" -> (SparkEntry.eventPipeline(_, "empty-events-scan")))
+    ops.foreach { case (name, op) =>
+      assert(op(none).collect().isEmpty, s"$name returned rows on an empty scan")
+    }
+    val noOrders = graft.ops.Relational.table(spark, "/root/testdata/sf0.001", "orders")
+      .filter(col("o_orderkey") < 0L)
+    val t = (n: String) => graft.ops.Relational.table(spark, "/root/testdata/sf0.001", n)
+    assert(graft.ops.Relational.revenueByNation(t("region"), t("nation"), t("customer"),
+      noOrders).collect().isEmpty)
+  }
 }

@@ -1126,4 +1126,54 @@ class PlanShapeSpec extends SparkTestBase {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** The query-plane aggregates that sort with Par.sortSmall. */
+  private val sortedLight = Seq("q_event_summary", "q_quality_histogram",
+    "q_type_counts", "q_hourly_counts", "q_tumbling_counts", "q_sliding_counts",
+    "q_value_stats", "q_revenue_by_nation")
+
+  private def occurrences(p: String, s: String): Int =
+    java.util.regex.Pattern.quote(s).r.findAllIn(p).length
+
+  test("dimension-sized aggregates sort in one partition: no range exchange") {
+    sortedLight.foreach { name =>
+      val p = plan(SparkEntry.queries(name)(spark, sf))
+      assert(!p.contains("Exchange rangepartitioning"), s"$name:\n$p")
+      // the partial + final aggregate pair survives the single-task sort
+      assert(p.contains("partial_"), s"$name lost its partial aggregate:\n$p")
+      assert("(Hash|ObjectHash|Sort)Aggregate".r.findAllIn(p).length >= 2, s"$name:\n$p")
+      if (name != "q_revenue_by_nation")
+        assert(occurrences(p, "Exchange hashpartitioning") == 1, s"$name:\n$p")
+    }
+  }
+
+  test("q_event_pipeline range-partitions the events scan on event_id, below the parse") {
+    val p = plan(SparkEntry.queries("q_event_pipeline")(spark, sf))
+    assert(occurrences(p, "Exchange rangepartitioning") == 1, p)
+    val at = p.indexOf("Exchange rangepartitioning(event_id")
+    assert(at > p.lastIndexOf("from_json"), s"range exchange not on event_id below from_json:\n$p")
+    assert(!p.contains("Exchange hashpartitioning"), p)
+  }
+
+  test("data-sized results keep orderBy's range exchange") {
+    val p = plan(SparkEntry.queries("q_top_orders_per_customer")(spark, sf))
+    assert(p.contains("Exchange rangepartitioning"), p)
+  }
+
+  test("one pass over the 15 light queries runs at most 38 jobs") {
+    val light = Seq("q_event_pipeline", "q_event_summary", "q_quality_histogram",
+      "q_verification_count", "q_health_check", "q_type_counts", "q_hourly_counts",
+      "q_dashboard_metrics", "q_recent_events", "q_tumbling_counts",
+      "q_sliding_counts", "q_value_stats", "q_revenue_by_nation",
+      "q_shipping_priority", "q_top_orders_per_customer")
+    val sf01 = "/root/testdata/sf0.01"
+    def pass(): Unit = light.foreach { name =>
+      spark.catalog.clearCache()
+      SparkEntry.clearCaches()
+      SparkEntry.queries(name)(spark, sf01).collect()
+    }
+    pass() // schema resolution and width probes run once per session
+    val jobs = jobsDuring(pass())
+    assert(jobs <= 38, s"$jobs jobs in one pass")
+  }
 }

@@ -1,13 +1,11 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
@@ -22,35 +20,6 @@ class TablesSpec extends SparkTestBase {
   import spark.implicits._
 
   private val ntzConf = "spark.sql.parquet.inferTimestampNTZ.enabled"
-  private val tagKey = "graft.tables.spec.tag"
-
-  /** Spark jobs submitted from this thread while `body` runs. A marker
-    * job submitted afterwards is awaited on the listener bus, which
-    * delivers in order, so every job of `body` has been seen by then.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val seen = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tagKey))).foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tagKey, tag)
-      body
-      sc.setLocalProperty(tagKey, s"$tag-end")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(s"$tag-end") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(s"$tag-end"), "listener bus did not deliver the marker job")
-      seen.asScala.count(_ == tag)
-    } finally {
-      sc.setLocalProperty(tagKey, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def withConf[T](key: String, value: String)(body: => T): T = {
     val prev = spark.conf.getOption(key)
