@@ -1599,22 +1599,15 @@ object SparkEntry {
       .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
         col("user_id"), col("event_type"), col("value"))
       .orderBy("event_id")),
-    "q_publish_roundtrip" -> ((s, d) => {
-      val ev = Par.widen(Analytics.events(s, d), col("event_id"))
-      val wire = Generator.toWire(
-        ev.select(
-          col("event_id").cast("string").as("id"),
-          date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'").as("timestamp"),
-          col("props").as("message"),
-          col("user_id").cast("string").as("user_id"),
-          col("event_type"), col("value")),
-        Seq("id", "timestamp", "message", "user_id", "event_type", "value"))
-      EventPipeline.parse(wire)
+    // the q_event_pipeline path: range-partitioned scan, wire JSON, one
+    // parse, each partition sorted on the range key
+    "q_publish_roundtrip" -> ((s, d) =>
+      EventPipeline.parse(eventWire(Par.widenByRange(Analytics.events(s, d),
+          col("event_id"), s"$d/events.parquet")))
         .select(col("id").cast("long").as("event_id"),
           col("user_id").cast("long").as("user_id"),
           col("event_type"), col("value"))
-        .orderBy("event_id")
-    }),
+        .sortWithinPartitions("event_id")),
     // ---- session windows (W4 stretch) ----
     "q_session_windows" -> ((s, d) => Analytics.sessionCounts(Analytics.events(s, d))),
     // ---- multimodal plumbing (§7.4-4; decode is a documented stub) ----

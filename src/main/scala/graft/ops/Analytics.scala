@@ -2543,10 +2543,12 @@ object Analytics {
         coalesce(sum((col("value").cast("decimal(12,2)") * 100)
           .cast("long")), lit(0L)).as("b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // three consumers that column pruning makes unequal (no exchange
+    // reuse): `per` stays cached until the 1-row result is checkpointed
     def ranks(c: String): DataFrame =
       Scan.midRank2(per.groupBy(col(c)).agg(count(lit(1)).as("cnt")),
         c, "cnt", s"r_$c").select(col(c), col(s"r_$c"))
-    per
+    val out = per
       .join(ranks("a"), "a")
       .join(ranks("b"), "b")
       .agg(
@@ -2563,6 +2565,7 @@ object Analytics {
                |    / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
                |           * CAST(n * syy - sy * sy AS DOUBLE)) * 10000, 0)
                |    AS BIGINT) END""".stripMargin).as("rho_e4"))
+    try out.localCheckpoint() finally per.unpersist(blocking = false)
   }
 
   /** DuckDB twin of [[spearman]] — identical ×2 mid-ranks and Pearson

@@ -1,14 +1,19 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph analytics over corpus-derived graphs. Connected
   * components share one kernel ([[Components.minLabel]]) with near-dup
-  * clustering; this adds weighted PageRank — the standard importance
-  * measure a curation pipeline uses to weight interlinked sources (and
-  * the canonical bounded-iteration distributed workload).
+  * clustering; PageRank, TextRank and personalized PageRank share one
+  * rank kernel ([[rankFixedPoint]]) — weighted PageRank is the standard
+  * importance measure a curation pipeline uses to weight interlinked
+  * sources (and the canonical bounded-iteration distributed workload).
+  * Every static fixed-point loop here (rank, label propagation, shortest
+  * paths, k-core) runs in the one staging scaffold [[Par.staticLoop]]
+  * and keeps only its round algebra and readout; k-truss stays on AQE
+  * (see [[kTrussFromPairs]]).
   */
 object Graph {
 
@@ -36,97 +41,85 @@ object Graph {
     *              + (85·Σ_{(s,v)∈E} (rankₜ₋₁(s)·w(s,v) div outw(s))) div 100
     *
     * Shape at 100 TB: the corpus-scale work is the ONE distinct-pair
-    * aggregate; the graph itself is interaction-sized. The edge table
-    * (with out-degree folded in) is persisted partitioned on src — the
-    * per-iteration rank join reuses that exchange, so each iteration
-    * shuffles only the node-sized rank frame plus the edge-sized
-    * contribution aggregate (partial map-side combine on dst). Rank
-    * frames are eagerly localCheckpoint'ed per iteration: lineage stays
-    * bounded and nothing re-executes the corpus scan. No driver-side
-    * data at all — the node count rides a 1-row broadcast.
+    * aggregate; the graph itself is interaction-sized. The iterations
+    * run in [[rankFixedPoint]]: each shuffles only the node-sized rank
+    * frame plus the contribution aggregate (partial map-side combine on
+    * dst), and nothing re-executes the corpus scan. No driver-side data
+    * at all — the node count rides the recurrence as a literal.
     */
   def pageRank(events: DataFrame, iters: Int = 10): DataFrame = {
     require(iters > 0, "iters must be positive")
     val pairs = events
       .select(concat(lit("u:"), col("user_id").cast("string")).as("u"),
-        concat(lit("t:"), col("event_type")).as("t"))
-      .groupBy(col("u"), col("t")).agg(count(lit(1)).as("w"))
-    val edges = pairs.select(col("u").as("src"), col("t").as("dst"), col("w"))
-      .unionAll(pairs.select(col("t").as("src"), col("u").as("dst"), col("w")))
-    rankFixedPoint(edges, iters).orderBy(col("node"))
+        concat(lit("t:"), col("event_type")).as("v"))
+      .groupBy(col("u"), col("v")).agg(count(lit(1)).as("w"))
+    rankFixedPoint(pairs, iters).orderBy(col("node"))
   }
 
-  /** The shared fixed-point power-iteration core behind [[pageRank]] and
-    * [[textRank]]: takes a weighted directed edge frame `(src, dst, w)`,
-    * returns `(node, rank)` after `iters` rounds of the integer
-    * recurrence documented on [[pageRank]]. The edge frame (out-weight
-    * folded in) persists partitioned on src for the per-iteration rank
-    * join; rank frames localCheckpoint eagerly so lineage stays flat.
+  /** The one fixed-point power-iteration kernel behind [[pageRank]],
+    * [[textRank]] and [[personalizedPageRank]]: over undirected weighted
+    * pairs `(u, v, w)` (no self pairs), walked in both directions, returns
+    * `(node, rank)` after `iters` rounds of the integer recurrence
+    *   rank₀(v) = [v ∈ S]·(SCALE div |S|)
+    *   rankₜ(v) = [v ∈ S]·(15·(SCALE div |S|)) div 100
+    *            + (85·Σ_{(s,v)∈E} (rankₜ₋₁(s)·w(s,v) div outw(s))) div 100
+    * where the seed set S is `seeds` (distinct ids in column `node`), or
+    * every node when `seeds` is None — then [v ∈ S] = 1 and |S| = N, the
+    * [[pageRank]] recurrence. No seed in the graph gives null ranks, the
+    * oracles' `nullif(ns, 0)`.
+    *
+    * The static-loop scaffold ([[Par.staticLoop]]) stages the pairs and
+    * pins the symmetrized edges, each with its dst's seed flag,
+    * partitioned and sorted on src, the per-iteration rank join's key.
+    * Symmetry does the rest: every node is some edge's dst, so the
+    * contribution aggregate's key set IS the node set (no per-iteration
+    * join back onto the nodes), and a node's in-weight equals its
+    * out-weight, so outw rides the rank frame out of the same aggregate.
+    * The oracle pairing guards both equivalences.
     */
-  private[ops] def rankFixedPoint(edges: DataFrame, iters: Int): DataFrame = {
-    // out-weight folded in with ONE pass + ONE exchange (the window
-    // formulation the oracle already uses): the groupBy+self-join form
-    // scanned the un-persisted edge build twice and exchanged twice.
-    // The window leaves e hash-partitioned on src — exactly what the
-    // per-iteration rank join wants, so the edge frame never moves again
-    // (guide §2.4). Per-iteration eager checkpoints are KEPT: a lazily
-    // chained multi-iteration plan was measured SLOWER (5.4 s vs 3.5 s
-    // q_pagerank) — each chained segment becomes one huge unique
-    // whole-stage-codegen unit (~1 s janino compile in a 1-task stage),
-    // while per-iteration plans are textually identical and hit the
-    // codegen cache.
-    // Staged + measured: the edge build computes ONCE into a cache (the
-    // callers' symmetrizing unions otherwise planned the pair aggregate
-    // twice), its bytes size the loop width, and the iterations run
-    // under static per-iteration plans (Par.withStaticLoop — measured
-    // rationale there). The function returns the eagerly-checkpointed
-    // rank frame, so callers plan their readout under the session's own
-    // confs.
-    val staged = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    staged.count()
-    val w = Par.measuredWidth(staged)
-    val out = Par.withStaticLoop(edges.sparkSession, w) {
-    // the window leaves e hash(src)-partitioned at the static width and
-    // sorted by src within partitions — exactly what the per-iteration
-    // sort-merge rank join needs, so the cached edge frame never moves
-    // or re-sorts again (guide §2.4)
-    val e = staged.withColumn("out_w",
-        sum(col("w")).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("src"))))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node")).distinct()
-      .localCheckpoint(true)
-    staged.unpersist(blocking = false)
-    // 1-row driver-side count (the k-means-seed discipline): n rides the
-    // per-iteration recurrence as a LITERAL instead of a broadcast
-    // crossJoin — one fewer broadcast exchange (and its AQE stage job)
-    // per iteration, bit-identical arithmetic
-    val n = nodes.count()
-    var rank = nodes
-      .select(col("node"), lit(RankScale / math.max(n, 1L)).as("rank"))
-      .localCheckpoint(true)
-    // REQUIREMENT: `edges` is symmetric (both callers build it as
-    // pair ∪ swap(pair)), so every node is some edge's dst and the
-    // aggregate's key set IS the node set — the per-iteration
-    // left-join back onto `nodes` (plus the broadcast AQE builds for
-    // it) is algebraically redundant and dropped. The teleport term is
-    // a constant, so no per-node attribute is needed either. A directed
-    // caller would need the nodes join back; the oracle pairing guards
-    // the equivalence.
-    for (_ <- 1 to iters) {
-      val contribs = e.join(rank, e("src") === rank("node"))
-        .select(col("dst"), expr("rank * w div out_w").as("contrib"))
-        .groupBy(col("dst")).agg(sum(col("contrib")).as("in_rank"))
-      rank = contribs
-        .select(col("dst").as("node"),
-          (lit((15L * (RankScale / math.max(n, 1L))) / 100L)
-            + expr("(85 * in_rank) div 100")).as("rank"))
+  private[ops] def rankFixedPoint(
+      pairs: DataFrame, iters: Int, seeds: Option[DataFrame] = None)
+      : DataFrame = {
+    // [id ∈ S] as column `flag` of `df`, its ids in column `key`
+    def seeded(df: DataFrame, key: String, flag: String): DataFrame =
+      seeds.fold(df.withColumn(flag, lit(1L)))(s => df
+        .join(broadcast(s.select(col("node").as(key), lit(1L).as(flag))),
+          Seq(key), "left")
+        .na.fill(0L, Seq(flag)))
+    Par.staticLoop(pairs, "src") { p =>
+      seeded(symmetricEdges(p, col("w")), "dst", "dst_seed")
+    } { e =>
+      val nodes = seeded(
+        e.groupBy(col("src").as("node")).agg(sum(col("w")).as("out_w")),
+        "node", "is_seed")
+      // 1-row driver-side seed count (the k-means-seed discipline): |S|
+      // rides the recurrence as a LITERAL instead of a broadcast
+      // crossJoin — one fewer broadcast exchange per iteration
+      val nsRow = nodes.agg(sum(col("is_seed"))).head()
+      val ns = Option.unless(nsRow.isNullAt(0))(nsRow.getLong(0)).filter(_ != 0L)
+      def perSeed(f: Long => Long): Column =
+        ns.fold(lit(null).cast("long"))(n => lit(f(n)))
+      val tele = perSeed(n => (15L * (RankScale / n)) / 100L)
+      var rank = nodes.select(col("node"), col("out_w"),
+          (col("is_seed") * perSeed(RankScale / _)).as("rank"))
         .localCheckpoint(true)
+      // Per-iteration eager checkpoints are KEPT: a lazily chained
+      // multi-iteration plan was measured SLOWER (5.4 s vs 3.5 s
+      // q_pagerank) — each chained segment becomes one huge unique
+      // whole-stage-codegen unit (~1 s janino compile in a 1-task stage),
+      // while per-iteration plans are textually identical and hit the
+      // codegen cache. dst_seed is constant per dst, so max() carries it.
+      for (_ <- 1 to iters) {
+        rank = e.join(rank, col("src") === col("node"))
+          .groupBy(col("dst"))
+          .agg(sum(expr("rank * w div out_w")).as("in_rank"),
+            sum(col("w")).as("out_w"), max(col("dst_seed")).as("is_seed"))
+          .select(col("dst").as("node"), col("out_w"),
+            (col("is_seed") * tele + expr("(85 * in_rank) div 100")).as("rank"))
+          .localCheckpoint(true)
+      }
+      rank.select(col("node"), col("rank"))
     }
-    e.unpersist()
-    rank
-    }
-    out
   }
 
   /** Chained-CTE ANSI twin of [[pageRank]] for the DuckDB oracle — one
@@ -209,9 +202,7 @@ object Graph {
       .select(least(col("x"), col("y")).as("u"),
         greatest(col("x"), col("y")).as("v"))
       .groupBy(col("u"), col("v")).agg(count(lit(1)).as("w"))
-    val edges = pairs.select(col("u").as("src"), col("v").as("dst"), col("w"))
-      .unionAll(pairs.select(col("v").as("src"), col("u").as("dst"), col("w")))
-    rankFixedPoint(edges, iters)
+    rankFixedPoint(pairs, iters)
       .select(col("node").as("word"), col("rank"))
       .orderBy(desc("rank"), col("word"))
       .limit(k)
@@ -253,86 +244,26 @@ object Graph {
     *   rankₜ(v) = [v ∈ S]·(15·(SCALE div |S|)) div 100
     *            + (85·Σ contribs) div 100.
     *
-    * Shape at 100 TB: identical to [[pageRank]] — the seed indicator is
-    * one more broadcast-joined node-sized column.
+    * Shape at 100 TB: identical to [[pageRank]] — the same kernel
+    * ([[rankFixedPoint]]) with the seed flag as one more broadcast-joined
+    * node-sized column.
     */
   def personalizedPageRank(
       events: DataFrame, iters: Int = 10, modulus: Long = 97L): DataFrame = {
     require(iters > 0, "iters must be positive")
-    // staged + measured: the pair aggregate computes ONCE into a cache
-    // (three consumers below — both union branches and the seed filter
-    // — otherwise re-planned it), and its bytes size the loop width
+    // the seed filter reads the pair frame the kernel stages
     val pairs = events
       .select(concat(lit("u:"), col("user_id").cast("string")).as("u"),
-        concat(lit("t:"), col("event_type")).as("t"),
+        concat(lit("t:"), col("event_type")).as("v"),
         col("user_id"))
-      .groupBy(col("u"), col("t"))
+      .groupBy(col("u"), col("v"))
       .agg(count(lit(1)).as("w"), min(col("user_id")).as("uid"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    pairs.count()
-    val w = Par.measuredWidth(pairs, 2.0)
-    val edges = pairs.select(col("u").as("src"), col("t").as("dst"), col("w"))
-      .unionAll(pairs.select(col("t").as("src"), col("u").as("dst"), col("w")))
     val seeds = pairs.filter(col("uid") % modulus === 0L)
       .select(col("u").as("node")).distinct()
-      .withColumn("is_seed", lit(1L))
-    // single-pass out-weight + per-iteration checkpoints + driver-side
-    // seed count — the [[rankFixedPoint]] discipline (see its scaladoc
-    // for the measured rationale); arithmetic is bit-identical: is_seed
-    // is 0/1, so `is_seed * (15*(S div ns)) div 100` equals
-    // `is_seed * lit((15*(S/ns))/100)`, and ns = 0 reproduces the
-    // nullif → null-rank → empty-readout path via a typed null literal
-    // dst's seed flag rides the persisted edge frame so the iteration
-    // can rebuild the rank frame straight from the contribution
-    // aggregate (the [[rankFixedPoint]] symmetric-graph argument) —
-    // no per-iteration nodes join, no per-iteration broadcast
-    // scope end returns the converged rank frame; the proximity readout
-    // below is planned under the caller's session confs
-    val ranks = Par.withStaticLoop(events.sparkSession, w) {
-    val e = edges
-      .join(broadcast(seeds.select(col("node").as("dst"),
-        col("is_seed").as("dst_seed"))), Seq("dst"), "left")
-      .na.fill(0L, Seq("dst_seed"))
-      .withColumn("out_w",
-        sum(col("w")).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("src"))))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node")).distinct()
-      .join(broadcast(seeds), Seq("node"), "left")
-      .na.fill(0L, Seq("is_seed"))
-      .localCheckpoint(true)
-    pairs.unpersist(blocking = false)
-    val nsRow = nodes.agg(sum(col("is_seed")).as("ns")).head()
-    val nsOpt: Option[Long] =
-      if (nsRow.isNullAt(0)) None else Some(nsRow.getLong(0)).filter(_ != 0L)
-    val initPer = nsOpt.map(v => lit(RankScale / v))
-      .getOrElse(lit(null).cast("long"))
-    val telePer = nsOpt.map(v => lit((15L * (RankScale / v)) / 100L))
-      .getOrElse(lit(null).cast("long"))
-    var rank = nodes
-      .select(col("node"), (col("is_seed") * initPer).as("rank"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      // symmetric edges ⇒ the aggregate's dst key set IS the node set
-      // (rankFixedPoint's argument); dst_seed is per-dst constant, so
-      // max() carries it exactly
-      val contribs = e.join(rank, e("src") === rank("node"))
-        .select(col("dst"), col("dst_seed"),
-          expr("rank * w div out_w").as("contrib"))
-        .groupBy(col("dst")).agg(sum(col("contrib")).as("in_rank"),
-          max(col("dst_seed")).as("is_seed"))
-      rank = contribs
-        .select(col("dst").as("node"),
-          (col("is_seed") * telePer
-            + expr("(85 * in_rank) div 100")).as("rank"))
-        .localCheckpoint(true)
-    }
-    e.unpersist()
-    rank
-    }
     // proximity readout: nonzero-rank nodes only (untouched nodes carry
     // no information in a personalized walk)
-    ranks.filter(col("rank") > 0L).orderBy(desc("rank"), col("node"))
+    rankFixedPoint(pairs, iters, Some(seeds))
+      .filter(col("rank") > 0L).orderBy(desc("rank"), col("node"))
   }
 
   /** DuckDB twin of [[personalizedPageRank]] — the [[pageRankOracleSql]]
@@ -380,6 +311,59 @@ object Graph {
        |ORDER BY rank DESC, node""".stripMargin
   }
 
+  /** Symmetric weighted edge frame `(src, dst, w)` from undirected
+    * pairs `(u, v)` weighted by `w` — a narrow union of two projections,
+    * so deriving it per consumer from a CACHED pair frame is cheaper than
+    * pinning a second copy.
+    */
+  private def symmetricEdges(
+      pairs: DataFrame, w: Column = col("support")): DataFrame = {
+    val p = pairs.select(col("u"), col("v"), w.as("w"))
+    p.select(col("u").as("src"), col("v").as("dst"), col("w"))
+      .unionAll(p.select(col("v").as("src"), col("u").as("dst"), col("w")))
+  }
+
+  /** The LPA label trajectory after `rounds` synchronous rounds over a
+    * prebuilt pair frame — the shared core of [[labelPropagation]] and
+    * [[modularity]], exposed so one cached trajectory can feed both
+    * readouts (SparkEntry shares it the way the near-dup pair set is
+    * shared): the 8-round iteration is the expensive half of either
+    * query, and the two queries replay the IDENTICAL trajectory by
+    * construction, so computing it twice is pure waste. Returns the
+    * eagerly localCheckpoint'ed (node, label) frame; the rounds run in
+    * the static-loop scaffold ([[Par.staticLoop]]), which pins the
+    * symmetric edges on the per-round join key dst, so only the
+    * node-sized label frame moves per round (guide §2.4).
+    */
+  def lpaLabels(pairs: DataFrame, rounds: Int = 8): DataFrame = {
+    require(rounds > 0, "rounds must be positive")
+    Par.staticLoop(pairs, "dst")(symmetricEdges(_)) { edges =>
+      var labels = edges.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node"))
+        .localCheckpoint(true)
+      val argmax = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("src")).orderBy(desc("wt"), col("label"))
+      // checkpoint cadence — see [[rankFixedPoint]]: fixed-round loop,
+      // identical per-round algebra, 1/ckptEvery the materialization jobs
+      val ckptEvery = 4
+      for (r <- 1 to rounds) {
+        labels = edges.join(labels, edges("dst") === labels("node"))
+          .groupBy(col("src"), col("label")).agg(sum(col("w")).as("wt"))
+          .withColumn("rn", row_number().over(argmax))
+          .filter(col("rn") === 1)
+          .select(col("src").as("node"), col("label"))
+        if (r % ckptEvery == 0 || r == rounds) labels = labels.localCheckpoint(true)
+      }
+      labels
+    }
+  }
+
+  /** Community summary readout over an LPA label frame. */
+  def labelSummary(labels: DataFrame): DataFrame =
+    labels.groupBy(col("label"))
+      .agg(count(lit(1)).as("n_members"), min(col("node")).as("min_member"))
+      .orderBy(desc("n_members"), col("label"))
+
   /** LABEL-PROPAGATION COMMUNITY DETECTION (Raghavan et al. 2007),
     * made deterministic: over the part co-purchase graph
     * ([[Relational.partPairCounts]]), every node starts as its own
@@ -398,80 +382,6 @@ object Graph {
     * round bounds lineage. Rounds are O(graph diameter) in practice —
     * 8 here; nothing iterates over the corpus.
     */
-  /** The shared LPA core: symmetric weighted edge frame (persisted —
-    * caller unpersists) and the converged (node, label) frame after
-    * `rounds` synchronous rounds.
-    */
-  /** Symmetric weighted edge frame from the canonical (u < v) pair
-    * aggregate — a narrow union of two projections, so deriving it per
-    * consumer from a CACHED pair frame is cheaper than pinning a second
-    * copy.
-    */
-  private def symmetricEdges(pairs: DataFrame): DataFrame = pairs
-    .select(col("u").as("src"), col("v").as("dst"), col("support").as("w"))
-    .unionAll(pairs
-      .select(col("v").as("src"), col("u").as("dst"), col("support").as("w")))
-
-  /** The LPA label trajectory after `rounds` synchronous rounds over a
-    * prebuilt pair frame — the shared core of [[labelPropagation]] and
-    * [[modularity]], exposed so one cached trajectory can feed both
-    * readouts (SparkEntry shares it the way the near-dup pair set is
-    * shared): the 8-round iteration is the expensive half of either
-    * query, and the two queries replay the IDENTICAL trajectory by
-    * construction, so computing it twice is pure waste. Returns the
-    * eagerly localCheckpoint'ed (node, label) frame; the loop's edge
-    * frame is persisted for the rounds and released once the final
-    * labels are materialized.
-    */
-  def lpaLabels(pairs: DataFrame, rounds: Int = 8): DataFrame = {
-    require(rounds > 0, "rounds must be positive")
-    // staged + measured pair frame sizes the loop width; the rounds run
-    // under static per-round plans (Par.withStaticLoop — measured
-    // rationale there)
-    val spark = pairs.sparkSession
-    val staged = pairs.storageLevel == StorageLevel.NONE
-    val src = if (staged) pairs.persist(StorageLevel.MEMORY_AND_DISK)
-      else pairs
-    src.count()
-    val w = Par.measuredWidth(src, 2.0)
-    val out = Par.withStaticLoop(spark, w) {
-    // persisted PRE-PARTITIONED on the per-round join key at the
-    // measured width, sorted within partitions on it: each round's
-    // sort-merge join reads the cache with no exchange and no re-sort;
-    // only the node-sized label frame moves per round (guide §2.4)
-    val edges = symmetricEdges(src).repartition(w, col("dst"))
-      .sortWithinPartitions(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint(true)
-    val argmax = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src")).orderBy(desc("wt"), col("label"))
-    // checkpoint cadence — see [[rankFixedPoint]]: fixed-round loop,
-    // identical per-round algebra, 1/ckptEvery the materialization jobs
-    val ckptEvery = 4
-    for (r <- 1 to rounds) {
-      labels = edges.join(labels, edges("dst") === labels("node"))
-        .groupBy(col("src"), col("label")).agg(sum(col("w")).as("wt"))
-        .withColumn("rn", row_number().over(argmax))
-        .filter(col("rn") === 1)
-        .select(col("src").as("node"), col("label"))
-      if (r % ckptEvery == 0 || r == rounds) labels = labels.localCheckpoint(true)
-    }
-    // labels are eager — the loop's working set can go now
-    edges.unpersist(blocking = false)
-    labels
-    }
-    if (staged) src.unpersist(blocking = false)
-    out
-  }
-
-  /** Community summary readout over an LPA label frame. */
-  def labelSummary(labels: DataFrame): DataFrame =
-    labels.groupBy(col("label"))
-      .agg(count(lit(1)).as("n_members"), min(col("node")).as("min_member"))
-      .orderBy(desc("n_members"), col("label"))
-
   def labelPropagation(
       lineitem: DataFrame, rounds: Int = 8, minSupport: Long = 2): DataFrame =
     labelSummary(
@@ -494,8 +404,9 @@ object Graph {
     */
   def modularity(
       lineitem: DataFrame, rounds: Int = 8, minSupport: Long = 2): DataFrame = {
+    // uncached: the loop stages the pairs for its rounds and releases
+    // them, the readout builds them again (SparkEntry shares one cache)
     val pairs = Relational.partPairCounts(lineitem, minSupport)
-      .persist(StorageLevel.MEMORY_AND_DISK)
     modularityFromPairs(pairs, lpaLabels(pairs, rounds))
   }
 
@@ -776,24 +687,11 @@ object Graph {
   /** [[shortestPaths]] over a prebuilt (ideally cached) pair frame. */
   def shortestPathsFromPairs(pairsIn: DataFrame, maxHops: Int = 4): DataFrame = {
     require(maxHops >= 1, "maxHops must be at least 1")
-    val pairs = pairsIn
-      .select(col("u"), col("v"), expr("1000000L div support").as("w"))
-    // staged + measured pair frame sizes the loop width; the relax
-    // rounds run under static per-round plans (Par.withStaticLoop —
-    // measured rationale there); the presentation sort below plans
-    // under the caller's confs
-    val stagedIn = pairsIn.storageLevel == StorageLevel.NONE
-    val src0 = if (stagedIn) pairsIn.persist(StorageLevel.MEMORY_AND_DISK)
-      else pairsIn
-    src0.count()
-    val wdt = Par.measuredWidth(src0, 2.0)
-    val dist = Par.withStaticLoop(pairsIn.sparkSession, wdt) {
-      val edges = pairs
-        .select(col("u").as("src"), col("v").as("dst"), col("w"))
-        .unionAll(pairs.select(col("v").as("src"), col("u").as("dst"), col("w")))
-        .repartition(wdt, col("src"))
-        .sortWithinPartitions(col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    // the relax rounds run in the static-loop scaffold (edges pinned on
+    // src, [[Par.staticLoop]]); the presentation sort below plans under
+    // the caller's confs
+    val dist = Par.staticLoop(pairsIn, "src")(
+        symmetricEdges(_, expr("1000000L div support"))) { edges =>
       val source = edges.groupBy(col("src")).agg(count(lit(1)).as("c"))
         .orderBy(col("c").desc, col("src")).limit(1)
         .select(col("src").as("v"), lit(0L).as("dist"), lit(0L).as("hops"))
@@ -810,10 +708,8 @@ object Graph {
           .select(col("v"), col("m.dist").as("dist"), col("m.hops").as("hops"))
           .localCheckpoint(true)
       }
-      edges.unpersist(blocking = false)
       dist
     }
-    if (stagedIn) src0.unpersist(blocking = false)
     dist.select(col("v").as("part_id"), col("dist"), col("hops"))
       .orderBy(col("dist"), col("part_id"))
   }
@@ -871,44 +767,31 @@ object Graph {
       k: Int = 3,
       minSupport: Long = 2,
       maxRounds: Int = 60): DataFrame =
-    // persisted: the peel loop reads the edge frame every round — the
-    // SparkEntry path passes the session-cached pair frame instead
-    kCoreFromPairs(Relational.partPairCounts(lineitem, minSupport)
-      .persist(StorageLevel.MEMORY_AND_DISK), k, maxRounds)
+    kCoreFromPairs(Relational.partPairCounts(lineitem, minSupport), k, maxRounds)
 
   /** [[kCore]] over a prebuilt (ideally cached) pair frame. */
   def kCoreFromPairs(
       pairsIn: DataFrame, k: Int = 3, maxRounds: Int = 60): DataFrame = {
-    val pairs = pairsIn.select(col("u"), col("v"))
-    // the peel loop re-reads the symmetric edge frame every round (two
-    // semi-joins + a degree aggregate): pin it on the round's first join
-    // key, at the width measured from the staged pair frame, sorted on
-    // that key so the per-round sort-merge join never re-sorts it.
-    // Lazy-persist discipline: Bench/Verify clear the pool between
-    // queries. The peel runs under static per-round plans
-    // (Par.withStaticLoop — measured rationale there); the final census
-    // below plans outside the scope.
-    val stagedIn = pairsIn.storageLevel == StorageLevel.NONE
-    val src0 = if (stagedIn) pairsIn.persist(StorageLevel.MEMORY_AND_DISK)
-      else pairsIn
-    src0.count()
-    val wdt = Par.measuredWidth(src0, 2.0)
-    val und = pairs
-      .unionAll(pairs.select(col("v").as("u"), col("u").as("v")))
-      .repartition(wdt, col("u"))
-      .sortWithinPartitions(col("u"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val alive = Par.withStaticLoop(pairsIn.sparkSession, wdt) {
-      var alive = und.select(col("u").as("n")).distinct().localCheckpoint(true)
+    // the peel runs in the static-loop scaffold ([[Par.staticLoop]]),
+    // which pins the symmetric edges on the round's first join key u.
+    // Each round keeps every survivor's degree within the survivors: at
+    // the fixed point that IS the census, so the readout needs no edges
+    // and plans outside the scope.
+    val core = Par.staticLoop(pairsIn, "u") { p =>
+      val e = p.select(col("u"), col("v"))
+      e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
+    } { und =>
+      def degrees(df: DataFrame) =
+        df.groupBy(col("u").as("n")).agg(count(lit(1)).as("d"))
+      var alive = degrees(und).localCheckpoint(true)
       var nAlive = alive.count()
       var round = 0
       var stable = false
       while (!stable && round < maxRounds) {
-        val deg = und
-          .join(alive.select(col("n").as("u")), "u")
-          .join(alive.select(col("n").as("v")), "v")
-          .groupBy(col("u")).agg(count(lit(1)).as("d"))
-        val next = deg.filter(col("d") >= k).select(col("u").as("n"))
+        val next = degrees(und
+            .join(alive.select(col("n").as("u")), "u")
+            .join(alive.select(col("n").as("v")), "v"))
+          .filter(col("d") >= k)
           .localCheckpoint(true)
         val nNext = next.count()
         stable = nNext == nAlive
@@ -920,12 +803,7 @@ object Graph {
         s"k-core peeling did not stabilize within $maxRounds rounds")
       alive
     }
-    if (stagedIn) src0.unpersist(blocking = false)
-    und
-      .join(alive.select(col("n").as("u")), "u")
-      .join(alive.select(col("n").as("v")), "v")
-      .groupBy(col("u").as("part_id"))
-      .agg(count(lit(1)).as("core_degree"))
+    core.select(col("n").as("part_id"), col("d").as("core_degree"))
       .orderBy(col("part_id"))
   }
 

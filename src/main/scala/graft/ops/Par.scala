@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 
 /** Scan-parallelism floor for COMPUTE-DENSE operator inputs (optimization
   * guide §2.5 "input skew — repartition immediately after the read").
@@ -54,49 +56,78 @@ private[graft] object Par {
     }
   }
 
-  /** STATIC per-round planning for convergence / power-iteration loops
-    * (guide §1.2 step 1 — fix the distributed algorithm's shape before
-    * configs; here the "shape" is the SCHEDULE).
+  /** The one staging scaffold of the static fixed-point loops: the
+    * min-label kernel ([[Components.minLabel]]) and [[Graph]]'s rank,
+    * label-propagation, shortest-path and k-core loops. For the loop's
+    * input frame `in` it
+    *  - persists `in` unless it is already cached, and counts it, so the
+    *    pin below reads it once and its bytes are a real measurement;
+    *  - sizes the loop width from those bytes ([[measuredWidth]]);
+    *  - runs under STATIC per-round planning (below) at that width;
+    *  - pins `pin(in)` hash-partitioned on the round's join key `key` at
+    *    that width, sorted within partitions on it, and hands it to
+    *    `body`;
+    *  - releases both caches in a finally, also when `body` throws at
+    *    its round bound.
+    * `body` must return eagerly checkpointed frames (or plans over them
+    * only): the pinned frame is gone when it returns, and the caller
+    * plans its readout under the session's own confs.
     *
-    * With AQE on, every exchange of every round materializes as its own
-    * adaptive query-stage JOB (plan → submit → wait → re-optimize). A
-    * fixed-point loop is dozens of rounds of SHAPE-STABLE kilobyte-to-
-    * node-frame plans, so the per-stage replanning/scheduling overhead
-    * dominates the round: round-13 profiling measured q_entity_resolution
-    * at 97 jobs / 4.9 s wall with only 0.2 MB of per-round state, and the
-    * whole loop family (CC, ER, dbscan, golden records, LPA, rank
-    * iterations) spending > half its wall clock between stages.
+    * Static planning (guide §1.2 step 1 — fix the distributed
+    * algorithm's shape before configs; here the "shape" is the
+    * SCHEDULE). With AQE on, every exchange of every round materializes
+    * as its own adaptive query-stage JOB (plan → submit → wait →
+    * re-optimize). A fixed-point loop is dozens of rounds of SHAPE-STABLE
+    * kilobyte-to-node-frame plans, so the per-stage replanning/scheduling
+    * overhead dominates the round: round-13 profiling measured
+    * q_entity_resolution at 97 jobs / 4.9 s wall with only 0.2 MB of
+    * per-round state, and the whole loop family (CC, ER, dbscan, golden
+    * records, LPA, rank iterations) spending > half its wall clock
+    * between stages.
     *
     * Inside the scope, AQE is OFF — each round's eager checkpoint is ONE
-    * job — and `spark.sql.shuffle.partitions` pins to `width`, which
-    * callers derive from the loop's MEASURED working-set bytes
-    * ([[measuredWidth]]), so the setting is scale-adaptive, never a
-    * constant: kilobyte loop frames plan 1-partition rounds locally, a
-    * TB edge frame plans thousands-wide rounds on a cluster. What AQE
-    * would have contributed per round is already provided structurally:
-    * partition sizing comes from the measured width, and the loop caches
-    * are built EXPLICITLY hash-partitioned on the per-round join key at
-    * that same width, so every round's join co-partitions with the cache
-    * (explicit-N partitionings are exact and never coalesced) and the
-    * cached side never re-exchanges. Skew: a single hot key inside a
-    * pre-partitioned cached frame is equally beyond AQE's reach (it
-    * cannot split a cached frame), so nothing is given up there either.
+    * job — and `spark.sql.shuffle.partitions` pins to the width, which
+    * comes from the loop's MEASURED working-set bytes, so the setting is
+    * scale-adaptive, never a constant: kilobyte loop frames plan
+    * 1-partition rounds locally, a TB edge frame plans thousands-wide
+    * rounds on a cluster. What AQE would have contributed per round is
+    * already provided structurally: partition sizing comes from the
+    * measured width, and the pinned frame is EXPLICITLY hash-partitioned
+    * on the per-round join key at that same width, so every round's join
+    * co-partitions with the cache (explicit-N partitionings are exact and
+    * never coalesced) and the cached side never re-exchanges or
+    * re-sorts. Skew: a single hot key inside a pre-partitioned cached
+    * frame is equally beyond AQE's reach (it cannot split a cached
+    * frame), so nothing is given up there either.
     */
-  def withStaticLoop[T](spark: SparkSession, width: Int)(body: => T): T =
-    withConfs(spark, Seq(
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> math.max(1, width).toString))(body)
+  def staticLoop[T](in: DataFrame, key: String)(pin: DataFrame => DataFrame)(
+      body: DataFrame => T): T = {
+    val staged = in.storageLevel == StorageLevel.NONE
+    if (staged) in.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      in.count()
+      val w = measuredWidth(in)
+      withConfs(in.sparkSession, Seq(
+          "spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> w.toString)) {
+        val pinned = pin(in).repartition(w, col(key))
+          .sortWithinPartitions(col(key))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        try body(pinned) finally pinned.unpersist(blocking = false)
+      }
+    } finally if (staged) in.unpersist(blocking = false)
+  }
 
-  /** Byte-measured loop width: ceil(bytes × scale / advisory partition
-    * size) of a PERSISTED AND MATERIALIZED frame — the same sizing rule
-    * AQE's byte-based coalescing applies, computed once per loop instead
-    * of once per stage. `scale` lets callers size for a derived frame
-    * (e.g. 2.0 when the loop cache is the symmetrized union of the
-    * measured pair frame). Falls back to `defaultParallelism` when the
-    * frame's stats are not real measurements (not cached / not yet
-    * materialized — the planner's placeholder size is defaultSizeInBytes).
+  /** Byte-measured loop width: ceil(2 × bytes / advisory partition size)
+    * of a PERSISTED AND MATERIALIZED frame — the same sizing rule AQE's
+    * byte-based coalescing applies, computed once per loop instead of
+    * once per stage; ×2 because [[staticLoop]]'s pinned frame is the
+    * symmetrized union of the measured input. Falls back to
+    * `defaultParallelism` when the frame's stats are not real
+    * measurements (not cached / not yet materialized — the planner's
+    * placeholder size is defaultSizeInBytes).
     */
-  def measuredWidth(df: DataFrame, scale: Double = 1.0): Int = {
+  private def measuredWidth(df: DataFrame): Int = {
     val spark = df.sparkSession
     val conf = spark.sessionState.conf
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -105,7 +136,7 @@ private[graft] object Par {
     else {
       val advisory = math.max(1L, conf.getConf(
         org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-      val w = math.ceil(bytes.toDouble * scale / advisory).toLong
+      val w = math.ceil(bytes.toDouble * 2.0 / advisory).toLong
       math.max(1L, math.min(w, 1L << 20)).toInt
     }
   }

@@ -1092,7 +1092,6 @@ object Relational {
       .agg(sum((money("o_totalprice") * 100).cast("long")).as("x"))
       .join(broadcastIfSmall(customer.select(col("c_custkey").as("o_custkey"),
         col("c_nationkey").as("nation"))), "o_custkey")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ranks = Scan.midRank2(
       per.groupBy(col("x")).agg(count(lit(1)).as("cnt")), "x", "cnt", "r2")
     val groups = per.join(ranks.select(col("x"), col("r2")), "x")

@@ -7,7 +7,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 /** Dev tool (guide §1): per-stage breakdown of named queries.
   *
   * Mirrors Bench's session + isolation discipline (caches cleared before
-  * every pass, untimed warm-up, timed passes) and prints, for the first
+  * every pass, untimed warm-up, timed passes), collects each result as
+  * the benchmark client (`graft.bench.Queries`) does — `count()` would
+  * let the optimizer drop the final sort and add its own count exchange —
+  * and prints, for the first
   * timed pass only, each stage's wall time, task count, input/shuffle
   * volumes — the evidence that says whether a slow query is compute,
   * exchange, or job-count bound. Optionally dumps explain("formatted") next to the numbers.
@@ -76,7 +79,7 @@ object Profile {
         println(s"[profile] plan-only: $name")
       } else {
       clearCaches()
-      try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+      try { fn(spark, sfDir).collect() } catch { case e: Throwable =>
         System.err.println(s"[profile] $name warm-up failed: ${e.getMessage}") }
       // THREE timed passes (the Bench throughput probe's best-of
       // discipline): per-query sf0.1 times swing ±40% run-to-run on this
@@ -88,7 +91,7 @@ object Profile {
         if (pass == 1) { stages.clear(); jobs = 0; record = true }
         spark.sparkContext.setJobDescription(s"profile:$name")
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+        try { fn(spark, sfDir).collect() } catch { case e: Throwable =>
           System.err.println(s"[profile] $name failed: ${e.getMessage}") }
         val sec = (System.nanoTime() - t0) / 1e9
         record = false

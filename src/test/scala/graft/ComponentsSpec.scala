@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Components, Dedup, Graph, Identity}
+import graft.ops.{Analytics, Components, Dedup, Graph, Identity, Relational}
 
 /** [[Components.minLabel]] against a local union-find over the same
   * nodes and edges, on the adversarial shapes: a long path (diameter),
@@ -12,6 +12,9 @@ class ComponentsSpec extends SparkTestBase {
   import spark.implicits._
 
   private val n = 10000L
+  private lazy val cache = spark
+    .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    .sharedState.cacheManager
   private val path = (0L until n - 1).map(i => (i, i + 1))
 
   /** Min-id label per node: union-find whose root is always the minimum. */
@@ -76,9 +79,11 @@ class ComponentsSpec extends SparkTestBase {
   }
 
   test("minLabel: hitting the round bound throws, naming the operator") {
+    spark.catalog.clearCache()
     val ex = intercept[IllegalStateException](labels(Nil, path, maxRounds = 2))
     assert(ex.getMessage.contains("test components did not converge in 2"),
       ex.getMessage)
+    assert(cache.isEmpty, "the thrown loop left a cached frame")
   }
 
   test("nearDupClusters: a 10^4-doc chain converges at the default maxIters") {
@@ -107,8 +112,6 @@ class ComponentsSpec extends SparkTestBase {
   }
 
   test("resolveEntities, goldenRecords and connectedComponents leave no cache behind") {
-    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager
     val rk = Seq((1L, "a"), (2L, "a"), (3L, "b"), (4L, "b"))
       .toDF("record_id", "key")
     val events = Seq(
@@ -124,5 +127,28 @@ class ComponentsSpec extends SparkTestBase {
     assert(cache.isEmpty, "goldenRecords left a cached frame")
     assert(Graph.connectedComponents(li).collect().length == 1)
     assert(cache.isEmpty, "connectedComponents left a cached frame")
+    def noCache(op: String)(run: => Long): Unit = {
+      assert(run > 0L, s"$op returned no rows")
+      assert(cache.isEmpty, s"$op left a cached frame")
+    }
+    val docs = Seq((1L, "alpha beta gamma"), (2L, "beta gamma delta"))
+      .toDF("doc_id", "text")
+    noCache("pageRank")(Graph.pageRank(events).count())
+    noCache("personalizedPageRank")(
+      Graph.personalizedPageRank(events, modulus = 98L).count())
+    noCache("textRank")(Graph.textRank(docs).count())
+    noCache("labelPropagation")(Graph.labelPropagation(li).count())
+    noCache("modularity")(Graph.modularity(li).count())
+    noCache("shortestPaths")(Graph.shortestPaths(li).count())
+    noCache("kCore")(Graph.kCore(li, k = 2).count())
+    noCache("kCoreFromPairs")(
+      Graph.kCoreFromPairs(Relational.partPairCounts(li, 2), k = 2).count())
+    noCache("spearman")(Analytics.spearman(events).count())
+    val orders = Seq((1L, 10.0), (2L, 20.0), (3L, 30.0))
+      .toDF("o_custkey", "o_totalprice")
+    val customer = Seq((1L, 1L), (2L, 1L), (3L, 2L))
+      .toDF("c_custkey", "c_nationkey")
+    noCache("kruskalWallis")(
+      Relational.kruskalWallis(orders, customer).count())
   }
 }

@@ -380,6 +380,7 @@ class EmptyInputSpec extends SparkTestBase {
     assert(graft.ops.TextAnalysis.expectedCalibrationError(noDocs)
       .count() == 0)
     assert(graft.ops.Graph.personalizedPageRank(noEventsFull).count() == 0)
+    assert(graft.ops.Graph.pageRank(noEventsFull).count() == 0)
     assert(graft.ops.Analytics.ivWald(noEventsFull).count() == 0)
     val noLiAssoc = Seq.empty[(Long, Long)].toDF("l_orderkey", "l_partkey")
     assert(graft.ops.Relational.assocRules(noLiAssoc).count() == 0)

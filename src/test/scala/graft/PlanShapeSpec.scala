@@ -1148,11 +1148,14 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("q_event_pipeline range-partitions the events scan on event_id, below the parse") {
-    val p = plan(SparkEntry.queries("q_event_pipeline")(spark, sf))
-    assert(occurrences(p, "Exchange rangepartitioning") == 1, p)
-    val at = p.indexOf("Exchange rangepartitioning(event_id")
-    assert(at > p.lastIndexOf("from_json"), s"range exchange not on event_id below from_json:\n$p")
-    assert(!p.contains("Exchange hashpartitioning"), p)
+    for (name <- Seq("q_event_pipeline", "q_publish_roundtrip")) {
+      val p = plan(SparkEntry.queries(name)(spark, sf))
+      assert(occurrences(p, "Exchange rangepartitioning") == 1, s"$name:\n$p")
+      val at = p.indexOf("Exchange rangepartitioning(event_id")
+      assert(at > p.lastIndexOf("from_json"),
+        s"$name: range exchange not on event_id below from_json:\n$p")
+      assert(!p.contains("Exchange hashpartitioning"), s"$name:\n$p")
+    }
   }
 
   test("data-sized results keep orderBy's range exchange") {
